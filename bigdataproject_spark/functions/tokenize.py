@@ -49,6 +49,10 @@ def _post_filter(
     # split() never yields NULL elements. sf10 CPU receipt for the
     # word-count shape: 24.5 → 22.7-23.4 CPU-s from this alone (the
     # post-explode restructure in q_word_count stacks on top).
+    if min_len < 1:
+        # min_len 0 would keep the empty token, which the translate
+        # numeric test drops but '^[0-9]+$' (the oracle's) keeps
+        raise ValueError(f"min_len must be >= 1, got {min_len}")
     cond = lambda t: (  # noqa: E731
         (F.length(t) >= min_len)
         & (~t.isin(*stopwords) if stopwords else F.lit(True))

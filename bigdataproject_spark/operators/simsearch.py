@@ -199,7 +199,7 @@ def _query_batch_splits(
     pays zero jobs. Tier 2: when metadata says over-budget OR reports
     the unknown-size sentinel (createDataFrame/LogicalRDD frames have
     no Catalyst size), the estimate is MEASURED via
-    :func:`_measured_query_bytes` — two tiny jobs over the query side.
+    :func:`_measured_query_bytes` — one aggregate over the query side.
     Tier 2 matters for selective filters over big tables: Catalyst's
     Filter keeps its child's sizeInBytes, so a 1% query slice of a
     large embedding table metadata-reads as the whole file and a
@@ -429,7 +429,7 @@ def _fit_quantizer(
 ):
     """Shared IVF quantizer fit (ivf_topk and ivf_write_index must stay
     in lockstep — same featurization, clamping, and seeding). Returns
-    (assigned, ctr_df, k_eff, n_rows, sum_d2) or None for an empty
+    (assigned, centroids, k_eff, n_rows, sum_d2) or None for an empty
     corpus; ``sum_d2`` is the KMeans training cost (Σ squared L2 to the
     assigned centroid) — the build-time quantization quality the drift
     metric of :func:`ivf_append_index` is measured against."""
@@ -455,10 +455,7 @@ def _fit_quantizer(
     centroids = [
         (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
     ]
-    ctr_df = corpus.sparkSession.createDataFrame(
-        centroids, "cell int, ctr array<double>"
-    )
-    return assigned, ctr_df, k_eff, n_rows, float(model.summary.trainingCost)
+    return assigned, centroids, k_eff, n_rows, float(model.summary.trainingCost)
 
 
 def ivf_topk(
@@ -489,7 +486,8 @@ def ivf_topk(
     recall, n_centroids for speed). The centroid table is tiny and
     broadcast; at 100TB the corpus would additionally be written
     partitioned/bucketed by ``cell`` so a probe prunes file I/O, not just
-    the join.
+    the join. Each query ROW is probed on its own (:func:`_probe_plan`):
+    q_id should be unique, as rows sharing one are ranked as one query.
     """
     fitted = _fit_quantizer(
         corpus,
@@ -509,10 +507,10 @@ def ivf_topk(
             F.lit(None).cast("double").alias("cosine"),
             F.lit(None).cast("int").alias("rank"),
         )
-    assigned, ctr_df, n_centroids, _, _ = fitted
+    assigned, centroids, n_centroids, _, _ = fitted
     return _ivf_search(
         assigned,
-        ctr_df,
+        centroids,
         queries,
         id_col=id_col,
         vec_col=vec_col,
@@ -524,7 +522,7 @@ def ivf_topk(
 
 def _ivf_search(
     assigned: DataFrame,
-    ctr_df: DataFrame,
+    centroids: list[tuple[int, list[float]]],
     queries: DataFrame,
     *,
     id_col: str,
@@ -534,45 +532,19 @@ def _ivf_search(
     exclude_self: bool,
 ) -> DataFrame:
     """Shared IVF search tail: probe the ``n_probe`` nearest cells per
-    query (tiny cross join against the broadcast centroid table,
-    squared-L2 — the quantizer's metric), then rank by cosine within the
-    probed cells. Used by both the KMeans and the sample quantizer."""
+    query (:func:`_probe_plan`, squared-L2 — the quantizer's metric),
+    then rank by cosine within the probed cells. Used by both the
+    KMeans and the sample quantizer."""
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("qv"),
         l2_norm(vec_col).alias("qn"),
     )
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("qv").cast("array<double>"), "ctr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(ctr_df))
-        .select("q_id", "qv", "qn", "cell", sq_dist.alias("d2"))
-        .withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= n_probe)
-        .select("q_id", "qv", "qn", "cell")
-    )
-
+    probes = _probe_plan(q, centroids, n_probe)
     joined = assigned.join(F.broadcast(probes), on="cell")
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("q_id"))
-    sim = joined.select(
-        "q_id",
-        "neighbor_id",
-        F.round(cosine_from_norms("qv", "cv", "qn", "cn"), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    # no final orderBy (r12 optimization round): the top-k output is
-    # (q_id, rank)-keyed and every consumer — driver value-hash, parity
-    # tests, rrf fusion — is order-insensitive; the presentation sort
-    # cost a range exchange + sort stage per search call.
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(joined, k)
 
 
 def sample_centroids(
@@ -615,40 +587,11 @@ def assign_cell_struct_expr(
 
     Pass a NAMED ``array<double>`` column: the vector is referenced once
     per centroid inside the fold, and a named column is a cheap
-    attribute where an inline cast would copy the array per centroid.
-
-    The centroid array is built as ONE SQL expression string parsed
-    JVM-side, not per-element ``F.lit`` Columns: 64 centroids × 32 dims
-    is ~2000 py4j round-trips (~1 s of driver time PER CALL, measured —
-    it dominated the sf10 append), vs ~7 ms for the single-string parse.
-    Same expression tree after parsing; Catalyst constant-folds it
-    either way."""
-    import math
-
+    attribute where an inline cast would copy the array per centroid."""
     v = F.col(vec) if isinstance(vec, str) else vec
-    for cell, ctr in centroids:
-        if not all(math.isfinite(float(x)) for x in ctr):
-            raise ValueError(
-                f"assign_cell_struct_expr: centroid {cell} has a "
-                "non-finite component"
-            )
-    parts = ", ".join(
-        "named_struct('cell', {}, 'ctr', array({}))".format(
-            int(cell), ",".join(repr(float(x)) + "D" for x in ctr)
-        )
-        for cell, ctr in centroids
-    )
-    ctrs = F.expr(f"array({parts})")
-
-    def _d2(c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
 
     def _step(acc: Column, s: Column) -> Column:
-        nd = _d2(s["ctr"])
+        nd = _sq_l2(v, s["ctr"])
         better = acc["cell"] < 0
         better = better | (nd < acc["d2"])
         return F.struct(
@@ -659,7 +602,62 @@ def assign_cell_struct_expr(
     init = F.struct(
         F.lit(None).cast("double").alias("d2"), F.lit(-1).alias("cell")
     )
-    return F.aggregate(ctrs, init, _step)
+    return F.aggregate(_centroids_literal(centroids), init, _step)
+
+
+def _centroids_literal(centroids: list[tuple[int, list[float]]]) -> Column:
+    """The centroids as ONE literal ``array<struct<cell, ctr>>``, built
+    as a single SQL expression string parsed JVM-side, not per-element
+    ``F.lit`` Columns: 64 centroids × 32 dims is ~2000 py4j round-trips
+    (~1 s of driver time PER CALL, measured — it dominated the sf10
+    append), vs ~7 ms for the single-string parse. Same expression tree
+    after parsing; Catalyst constant-folds it either way."""
+    import math
+
+    for cell, ctr in centroids:
+        if not all(math.isfinite(float(x)) for x in ctr):
+            raise ValueError(f"centroid {cell} has a non-finite component")
+    parts = ", ".join(
+        "named_struct('cell', {}, 'ctr', array({}))".format(
+            int(cell), ",".join(repr(float(x)) + "D" for x in ctr)
+        )
+        for cell, ctr in centroids
+    )
+    return F.expr(f"array({parts})")
+
+
+def _sq_l2(v: Column, c: Column) -> Column:
+    """Squared L2 as a left fold — NULL when either side is NULL, holds
+    a NULL element, or the lengths differ (zip_with pads with NULL)."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _probe_plan(
+    q: DataFrame, centroids: list[tuple[int, list[float]]], n_probe: int
+) -> DataFrame:
+    """Multi-probe assignment: (q_id, qv, qn, cell) with one row per
+    probed cell — each query row's ``n_probe`` nearest centroids by
+    (d2, cell). The map-side twin of :func:`assign_cell_struct_expr`
+    over the same literal centroid array, exploded: no cross join, no
+    exchange, no job to build it. ``sort_array`` orders the (d2, cell)
+    structs as a window's ``ORDER BY d2, cell`` would: NULL d2 (a NULL,
+    NULL-element or wrong-length vector) first, NaN last, ties by cell.
+    Each query ROW is probed on its own; a window over a repeated
+    q_id would pool the rows' candidates."""
+    d2_cells = F.transform(
+        _centroids_literal(centroids),
+        lambda s: F.struct(
+            _sq_l2(F.col("_qd"), s["ctr"]).alias("d2"), s["cell"].alias("cell")
+        ),
+    )
+    nearest = F.slice(F.sort_array(d2_cells), 1, max(n_probe, 0))
+    return q.withColumn("_qd", F.col("qv").cast("array<double>")).select(
+        "q_id", "qv", "qn", F.explode(nearest["cell"]).alias("cell")
+    )
 
 
 def assign_cell_expr(
@@ -688,7 +686,8 @@ def ivf_topk_sampleq(
     is reproducible in ANSI SQL, which makes this the hash-checkable
     registry variant. Cell assignment is a map-side literal-centroid
     argmin (:func:`assign_cell_expr`), so the corpus is never shuffled
-    for the assignment — the same scale shape as KMeans transform."""
+    for the assignment — the same scale shape as KMeans transform.
+    Repeated q_ids behave as in :func:`ivf_topk`."""
     centroids = sample_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids
     )
@@ -708,12 +707,9 @@ def ivf_topk_sampleq(
     ).select(
         "neighbor_id", "cv", "cn", assign_cell_expr("_vd", centroids).alias("cell")
     )
-    ctr_df = corpus.sparkSession.createDataFrame(
-        centroids, "cell int, ctr array<double>"
-    )
     return _ivf_search(
         assigned,
-        ctr_df,
+        centroids,
         queries,
         id_col=id_col,
         vec_col=vec_col,
@@ -768,21 +764,21 @@ def ivf_write_index(
     )
     if fitted is None:
         raise ValueError("ivf_write_index: corpus is empty; nothing to index")
-    assigned, ctr_df, _, n_rows, sum_d2 = fitted
+    assigned, centroids, _, n_rows, sum_d2 = fitted
     spark = corpus.sparkSession
     _overwrite_cells_and_stats(
         spark, path,
         write_cells=lambda d: _write_cells(
             assigned, d, mode="overwrite", defer_success=True
         ),
-        centroids_df=ctr_df,
+        centroids=centroids,
         stats=(n_rows, sum_d2),
         lease_owner=lease_owner,
     )
 
 
 def _overwrite_cells_and_stats(
-    spark, path: str, *, write_cells, centroids_df, stats, lease_owner=None
+    spark, path: str, *, write_cells, centroids, stats, lease_owner=None
 ) -> None:
     """Full-rebuild writer for the versioned layout
     (operators/versioned.py): the cells table WITH its paired
@@ -840,18 +836,11 @@ def _overwrite_cells_and_stats(
             if not fs.exists(HPath(f"{paired}/_SUCCESS")) and fs.exists(
                 HPath(flat)
             ):
-                spark.read.parquet(flat).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(paired)
+                _copy_centroids(spark, flat, paired)
         c_tgt, c_ver = table_overwrite_target(spark, path, "cells")
         write_cells(c_tgt)
-        # repartition(1), NOT coalesce(1): the local centroid frame
-        # parallelizes into defaultParallelism pickled slices, and
-        # coalesce folds all of them into ONE task that runs a Python
-        # worker per slice SEQUENTIALLY (~4 s for a 64-row frame);
-        # repartition evaluates them in parallel and shuffles the tiny
-        # rows (measured 0.8 s) — same reasoning as sources/writers.py.
-        centroids_df.repartition(1).write.mode("overwrite").parquet(
+        centroids_df = _one_partition_df(spark, centroids, _CENTROIDS_SCHEMA)
+        centroids_df.write.mode("overwrite").parquet(
             f"{c_tgt}/{_CENTROIDS_SUBDIR}"
         )
         # the generation's completeness marker, created only AFTER the
@@ -868,15 +857,14 @@ def _overwrite_cells_and_stats(
         _write_index_stats(spark, s_tgt, kind="build", n_rows=n, sum_d2=sum_d2)
         if s_ver is not None:
             publish_version(spark, path, "stats", s_ver, s_prev)
-        centroids_df.repartition(1).write.mode("overwrite").parquet(
-            f"{path}/centroids"
-        )
+        centroids_df.write.mode("overwrite").parquet(f"{path}/centroids")
     finally:
         release_lease(spark, path, owner)
 
 
 def _obs_stats(obs) -> tuple[int, float]:
-    """(n, sum_d2) from a write-piggybacked Observation. When AQE's
+    """(n, sum_d2) from a write-piggybacked Observation (sum_d2 0.0 when
+    only a count was observed). When AQE's
     empty-relation propagation prunes the whole input subtree (an EMPTY
     batch behind the repartition exchange), the CollectMetrics node is
     eliminated with it and ``obs.get`` raises instead of reporting
@@ -886,7 +874,7 @@ def _obs_stats(obs) -> tuple[int, float]:
         got = obs.get
     except Exception:
         return (0, 0.0)
-    return (int(got["n"]), float(got["sum_d2"] or 0.0))
+    return (int(got["n"]), float(got.get("sum_d2") or 0.0))
 
 
 # Files per cell per write: 1 would minimize file count, but a
@@ -954,17 +942,19 @@ def _write_index_stats(
     """``stats_dir`` is the CONCRETE generation directory (resolve
     through operators/versioned.py — the ledger is versioned by the
     compaction fold)."""
-    # repartition(1), NOT coalesce(1): this single-row local frame
-    # still parallelizes into defaultParallelism pickled slices, and
-    # coalesce would evaluate every slice sequentially in one task —
-    # one Python worker round-trip each, ~4 s of pure overhead PER
-    # APPEND on local[32] (measured; repartition: 0.8 s). Same
-    # reasoning as sources/writers.py.
-    spark.createDataFrame(
-        [(kind, int(n_rows), float(sum_d2), ledger_id)], _INDEX_STATS_SCHEMA
-    ).repartition(1).write.mode("append" if append else "overwrite").parquet(
-        stats_dir
-    )
+    _one_partition_df(
+        spark, [(kind, int(n_rows), float(sum_d2), ledger_id)], _INDEX_STATS_SCHEMA
+    ).write.mode("append" if append else "overwrite").parquet(stats_dir)
+
+
+def _one_partition_df(spark, rows: list, schema: str) -> DataFrame:
+    """A driver-side list as a ONE-partition frame, for the index's
+    one-file writes (stats rows, centroids). ``createDataFrame`` of a
+    list parallelizes into defaultParallelism slices: coalesce(1) then
+    runs a Python worker per slice sequentially in one task (~4 s per
+    append on local[32], measured) and repartition(1) adds a shuffle
+    job; one slice is one task and one job."""
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
 def _read_stats(spark, path: str) -> DataFrame:
@@ -1025,19 +1015,46 @@ def _centroids_dir(spark, path: str, cells_dir: str) -> str:
     return f"{path}/centroids"
 
 
+_CENTROIDS_SCHEMA = "cell int, ctr array<double>"
+
+
 def _collect_index_centroids(
     spark, path: str, cells_dir: str
 ) -> list[tuple[int, list[float]]]:
     """The centroid table paired with ``cells_dir`` as the literal list
-    :func:`assign_cell_struct_expr` consumes — a bounded collect
-    (≤ n_centroids rows), sorted by cell so the fold's tie-break is
-    deterministic across calls."""
+    :func:`assign_cell_struct_expr` consumes — ONE job: a bounded
+    collect (≤ n_centroids rows) read through the fixed schema (no
+    inference job), sorted by cell driver-side (no range-exchange sort)
+    so the fold's tie-break is deterministic across calls."""
     rows = (
-        spark.read.parquet(_centroids_dir(spark, path, cells_dir))
-        .orderBy("cell")
+        spark.read.schema(_CENTROIDS_SCHEMA)
+        .parquet(_centroids_dir(spark, path, cells_dir))
         .collect()
     )
-    return [(int(r["cell"]), [float(x) for x in r["ctr"]]) for r in rows]
+    return sorted((int(r["cell"]), [float(x) for x in r["ctr"]]) for r in rows)
+
+
+def _copy_centroids(spark, src: str, dst: str) -> None:
+    """Carry a centroid table dir to ``dst`` as a byte-for-byte file
+    copy (no Spark job). The source's ``_SUCCESS`` is NOT copied: a
+    directory copy lands files in listing order, so the marker could
+    precede a part file, and :func:`_centroids_dir` reads a marked copy
+    as complete. ``dst`` is marked only after every data file is in."""
+    jvm = spark._jvm
+    HPath = jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    s, d = HPath(src), HPath(dst)
+    sfs, dfs = s.getFileSystem(conf), d.getFileSystem(conf)
+    dfs.delete(HPath(d, "_SUCCESS"), False)  # unmark before tearing down
+    dfs.delete(d, True)
+    dfs.mkdirs(d)
+    for st in sfs.listStatus(s):
+        name = st.getPath().getName()
+        if name != "_SUCCESS":
+            jvm.org.apache.hadoop.fs.FileUtil.copy(
+                sfs, st.getPath(), dfs, HPath(d, name), False, conf
+            )
+    _touch_success(spark, dst)
 
 
 def ivf_write_index_from_centroids(
@@ -1088,9 +1105,7 @@ def ivf_write_index_from_centroids(
         write_cells=lambda d: _write_cells(
             assigned.drop("_d2"), d, mode="overwrite", defer_success=True
         ),
-        centroids_df=spark.createDataFrame(
-            centroids, "cell int, ctr array<double>"
-        ),
+        centroids=centroids,
         stats=lambda: _obs_stats(obs),
         lease_owner=lease_owner,
     )
@@ -1297,6 +1312,10 @@ def ivf_append_index(
             f"generation flip; re-run this batch after the lease clears "
             f"(idempotent with guard_ids=True)"
         ) from ex
+    # "auto" resolved from the centroids this append already holds, so
+    # the report need not re-read them (an explicit value is verbatim)
+    if max_cell_share_threshold == "auto":
+        max_cell_share_threshold = _auto_cell_share_threshold(len(centroids))
     report = ivf_index_drift(
         spark,
         path,
@@ -1349,6 +1368,12 @@ def _reconstruct_build_stats(
         # the missing generation and the fresh ledger is a permanently
         # unpublished orphan only the newest-complete fallback can see
         publish_version(spark, path, "stats", ver, None)
+
+
+def _auto_cell_share_threshold(n_cells: int) -> float:
+    """The ``"auto"`` occupancy threshold: only a cell at >= 3x uniform
+    share can flag (see :func:`ivf_index_drift`)."""
+    return max(0.5, 3.0 / max(int(n_cells), 1))
 
 
 def ivf_index_drift(
@@ -1431,35 +1456,22 @@ def ivf_index_drift(
         from bigdataproject_spark.operators.versioned import table_read_dir
 
         cells_dir = table_read_dir(spark, path, "cells")
-        n_cells = spark.read.parquet(
-            _centroids_dir(spark, path, cells_dir)
-        ).count()
         if max_cell_share_threshold == "auto":
-            eff_threshold = max(0.5, 3.0 / max(int(n_cells), 1))
+            eff_threshold = _auto_cell_share_threshold(
+                len(_collect_index_centroids(spark, path, cells_dir))
+            )
         else:
             eff_threshold = float(max_cell_share_threshold)
         # total comes from the same scan as the max (NOT from the
         # ledger: unguarded-replay duplicates die at compaction, so the
-        # ledger can over-count the live cells table). struct-max keeps
-        # the hot-cell tie-break deterministic (largest n, smallest id).
-        occ = (
-            spark.read.parquet(cells_dir)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(
-                F.sum("n").alias("total"),
-                F.max(
-                    F.struct(
-                        F.col("n").alias("n"),
-                        (-F.col("cell")).cast("long").alias("negc"),
-                    )
-                ).alias("mx"),
-            )
-            .collect()[0]
-        )
-        if occ["total"]:
-            hot_cell = int(-occ["mx"]["negc"])
-            max_share = int(occ["mx"]["n"]) / int(occ["total"])
+        # ledger can over-count the live cells table). One ≤ n_centroids
+        # row collect; the hot-cell tie-break is deterministic (largest
+        # n, smallest id).
+        occ = spark.read.parquet(cells_dir).groupBy("cell").count().collect()
+        if occ:
+            hot_n, neg_cell = max((r["count"], -r["cell"]) for r in occ)
+            hot_cell = -neg_cell
+            max_share = hot_n / sum(r["count"] for r in occ)
             rec = rec or (max_share > eff_threshold)
     # compaction-cadence fields (r8 VERDICT item 2): the versioned
     # layout's one-generation grace window means ops must keep publish
@@ -1567,13 +1579,12 @@ def ivf_compact_index(
         release_lease(spark, path, owner)
 
 
-
-
-
 def _compact_index_leased(
     spark, path: str, files_per_cell: int | None, keep_marker_ids, owner: str
 ) -> dict:
     """:func:`ivf_compact_index` body, lease already held."""
+    from pyspark.sql import Observation
+
     from bigdataproject_spark.operators.versioned import (
         publish_version,
         table_live_dir,
@@ -1593,19 +1604,24 @@ def _compact_index_leased(
     fs.delete(Path(f"{path}/cells__old"), True)
 
     df = spark.read.parquet(cells_prev)
-    rows_before = df.count()
-    deduped = df.dropDuplicates(["neighbor_id", "cell"])
-    ctr_prev = _centroids_dir(spark, path, cells_prev)
-    n_cells = spark.read.parquet(ctr_prev).count()
     if files_per_cell is None:
         from bigdataproject_spark.operators.dedup import _plan_size_bytes
 
         target = 128 * 1024 * 1024
+        n_cells = len(_collect_index_centroids(spark, path, cells_prev))
         files_per_cell = max(
             1, -(-_plan_size_bytes(df) // (target * max(n_cells, 1)))
         )
     tgt, ver = table_overwrite_target(
         spark, path, "cells", force_version=True
+    )
+    # row counts before and after the dedup, observed on the rewrite
+    # itself instead of two extra count jobs
+    obs_in, obs_out = Observation("ivf_compact_in"), Observation("ivf_compact_out")
+    deduped = (
+        df.observe(obs_in, F.count(F.lit(1)).alias("n"))
+        .dropDuplicates(["neighbor_id", "cell"])
+        .observe(obs_out, F.count(F.lit(1)).alias("n"))
     )
     salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(int(files_per_cell)))
     (
@@ -1622,12 +1638,12 @@ def _compact_index_leased(
     # leave an incomplete dir resolution ignores, never a
     # complete-looking generation without its quantizer
     # (:func:`_centroids_dir`); compaction never changes the quantizer.
-    spark.read.parquet(ctr_prev).coalesce(1).write.mode("overwrite").parquet(
-        f"{tgt}/{_CENTROIDS_SUBDIR}"
+    _copy_centroids(
+        spark, _centroids_dir(spark, path, cells_prev), f"{tgt}/{_CENTROIDS_SUBDIR}"
     )
     _touch_success(spark, tgt)
     before = n_parquet_files(spark, cells_prev)
-    rows_after = spark.read.parquet(tgt).count()
+    rows_before, rows_after = _obs_stats(obs_in)[0], _obs_stats(obs_out)[0]
     publish_version(spark, path, "cells", ver, cells_prev)
 
     # ---- stats-ledger fold (module docstring + ivf_index_drift) ----
@@ -1704,10 +1720,12 @@ def ivf_topk_indexed(
     per-query results never depend on other queries. Each batch re-runs
     the probe-cell collect and corpus scan; that linear re-scan cost is
     the price of never materializing an over-budget driver block. The
-    probe plan is evaluated
-    twice (once reduced to distinct cells, once in the join); it is a
-    scan + broadcast-centroid cross-join + tiny window, so recompute is
-    cheaper than a session-lifetime persist leak. Semantics identical to
+    probe plan is a map-only projection over the query scan (the
+    literal-centroid multi-probe of :func:`_probe_plan`); the native
+    path evaluates it twice (distinct cells, then the join), the blas
+    path once — its collected rows carry the cells. Each query ROW is
+    probed on its own, so q_id should be unique (rows sharing one are
+    ranked as one query). Semantics identical to
     :func:`ivf_topk` given the same centroids; with
     ``n_probe >= n_centroids`` it equals exact brute force (tested).
 
@@ -1747,7 +1765,7 @@ def ivf_topk_indexed(
 
     cells_dir = table_read_dir(spark, path, "cells")
     corpus_base = spark.read.parquet(cells_dir)
-    ctr_df = spark.read.parquet(_centroids_dir(spark, path, cells_dir))
+    centroids = _collect_index_centroids(spark, path, cells_dir)
     impl = _resolve_impl(
         impl,
         "ivf_topk_indexed",
@@ -1765,12 +1783,11 @@ def ivf_topk_indexed(
     # centroid — sizing the budget by raw n_probe against a smaller index
     # (e.g. the documented n_probe >= n_centroids brute-force setting)
     # would over-split by n_probe/n_centroids and multiply redundant
-    # corpus re-scans. The centroid table is <= n_centroids rows; its
-    # count is a trivial job next to a search.
-    est_probe = min(max(n_probe, 1), max(ctr_df.count(), 1))
+    # corpus re-scans.
+    est_probe = min(max(n_probe, 1), max(len(centroids), 1))
     return _batched_over_queries(
         lambda qb: _ivf_indexed_search(
-            spark, corpus_base, ctr_df, qb,
+            corpus_base, centroids, qb,
             k=k, n_probe=n_probe, exclude_self=exclude_self, impl=impl,
         ),
         q,
@@ -1780,9 +1797,8 @@ def ivf_topk_indexed(
 
 
 def _ivf_indexed_search(
-    spark,
     corpus_base: DataFrame,
-    ctr_df: DataFrame,
+    centroids: list[tuple[int, list[float]]],
     q: DataFrame,
     *,
     k: int,
@@ -1794,50 +1810,24 @@ def _ivf_indexed_search(
     projected to (q_id, qv, qn) and guaranteed within the broadcast
     budget by the caller's :func:`_query_batch_splits` split).
     ``corpus_base`` is the cells scan the caller bound to ONE resolved
-    generation — every batch filters the same snapshot, and ``ctr_df``
-    is that generation's paired quantizer."""
-    sq_dist = F.aggregate(
-        F.zip_with(
-            F.col("qv").cast("array<double>"), "ctr", lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probe_plan = (
-        q.crossJoin(F.broadcast(ctr_df))
-        .select("q_id", "qv", "qn", "cell", sq_dist.alias("d2"))
-        .withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= n_probe)
-        .select("q_id", "qv", "qn", "cell")
-    )
+    generation — every batch filters the same snapshot, and
+    ``centroids`` is that generation's paired quantizer."""
+    probe_plan = _probe_plan(q, centroids, n_probe)
+    if impl == "blas":
+        return _ivf_blas_topk(
+            corpus_base, probe_plan, k=k, exclude_self=exclude_self
+        )
     # Driver sees only the distinct probed cell ids (≤ n_centroids ints)
     # for the static partition filter; the full (q_id, qv, qn, cell)
     # assignment never leaves the executors — with a large query table a
     # row collect here would be a driver OOM.
     cells = sorted(r["cell"] for r in probe_plan.select("cell").distinct().collect())
-    corpus = corpus_base.filter(F.col("cell").isin(cells))
-    if impl == "blas":
-        return _ivf_blas_topk(
-            corpus, probe_plan, k=k, exclude_self=exclude_self
-        )
-    joined = corpus.join(F.broadcast(probe_plan), on="cell")
+    joined = corpus_base.filter(F.col("cell").isin(cells)).join(
+        F.broadcast(probe_plan), on="cell"
+    )
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("q_id"))
-    sim = joined.select(
-        "q_id",
-        "neighbor_id",
-        F.round(cosine_from_norms("qv", "cv", "qn", "cn"), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    # no final orderBy (r12 optimization round): the top-k output is
-    # (q_id, rank)-keyed and every consumer — driver value-hash, parity
-    # tests, rrf fusion — is order-insensitive; the presentation sort
-    # cost a range exchange + sort stage per search call.
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(joined, k)
 
 
 def _blas_query_batched(
@@ -1939,6 +1929,9 @@ def _ivf_blas_topk(
     acc: dict[int, list] = {}
     for r in probe_plan.collect():
         acc.setdefault(r["cell"], []).append((r["q_id"], r["qv"], r["qn"]))
+    # the probed cells are the collected rows' own: on an index this is
+    # the static partition filter, so the scan reads only their files
+    corpus = corpus.filter(F.col("cell").isin(sorted(acc)))
     for cell, lst in acc.items():
         good, bad_ids = [], []
         for qid, qv, qn_ in lst:

@@ -97,6 +97,14 @@ def test_tokenize_filters(spark):
     assert toks == ["cat", "cat", "runs", "fast"]
 
 
+def test_tokenize_rejects_min_len_below_one():
+    import pytest
+
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="min_len must be >= 1"):
+            tokenize_expr("text", min_len=bad)
+
+
 def test_tokenize_null(spark):
     df = spark.createDataFrame([Row(text=None)], "text string")
     assert df.select(tokenize_expr("text")).collect()[0][0] == []
