@@ -35,9 +35,16 @@ DEFAULT_STOPWORDS: tuple[str, ...] = (
 _SPLIT_PATTERN = r"[^\p{L}\p{N}]+"  # split on any non letter/digit run
 
 
-def _post_filter(
-    tokens: Column, stopwords: Sequence[str], min_len: int, drop_numeric: bool
+# Shortest token the default tokenizer keeps (the reference drops
+# tokens of length <= 1).
+DEFAULT_MIN_LEN = 2
+
+
+def _token_keep(
+    t: Column, stopwords: Sequence[str], min_len: int, drop_numeric: bool
 ) -> Column:
+    """The per-token keep predicate of the post-filter, shared with
+    post-explode filters (q_word_count) that keep one token per row."""
     # r13 (per-token constant factors — HOF lambdas run interpreted, so
     # every per-token op counts; same receipt class as the textstats
     # isin swap): stopwords via ``isin`` (OptimizeIn rewrites >10
@@ -53,7 +60,7 @@ def _post_filter(
         # min_len 0 would keep the empty token, which the translate
         # numeric test drops but '^[0-9]+$' (the oracle's) keeps
         raise ValueError(f"min_len must be >= 1, got {min_len}")
-    cond = lambda t: (  # noqa: E731
+    return (
         (F.length(t) >= min_len)
         & (~t.isin(*stopwords) if stopwords else F.lit(True))
         & (
@@ -62,14 +69,19 @@ def _post_filter(
             else F.lit(True)
         )
     )
-    return F.filter(tokens, cond)
+
+
+def _post_filter(
+    tokens: Column, stopwords: Sequence[str], min_len: int, drop_numeric: bool
+) -> Column:
+    return F.filter(tokens, lambda t: _token_keep(t, stopwords, min_len, drop_numeric))
 
 
 def tokenize_expr(
     text: Column | str,
     *,
     stopwords: Sequence[str] = DEFAULT_STOPWORDS,
-    min_len: int = 2,
+    min_len: int = DEFAULT_MIN_LEN,
     drop_numeric: bool = True,
     lowercase: bool = True,
 ) -> Column:

@@ -188,9 +188,9 @@ def clean_corpus(
 
     NOTE — plan construction is EAGER when ``span_broadcast_max_bytes
     > 0`` (the default): the span stage's measured-byte broadcast guard
-    localCheckpoints the per-doc span aggregate and runs one job at
-    BUILD time to measure it (spandedup._measured_broadcast), and each
-    invocation pins that checkpoint's blocks until the session ends.
+    localCheckpoints the per-doc span aggregate at BUILD time, measuring
+    it on the checkpoint's own jobs (spandedup._measured_broadcast), and
+    each invocation pins that checkpoint's blocks until the session ends.
     Callers constructing the plan repeatedly (benchmarks, tests) or
     wanting a pure-lazy plan should pass
     ``span_broadcast_max_bytes=0``, which skips the checkpoint and

@@ -335,12 +335,17 @@ def collapse_identical_pairs(
     that only need keep/drop decisions should aggregate group → canonical
     id instead of materializing all pairs.
 
-    ADAPTIVE: collapsing costs ~6 extra small shuffles (set-key agg +
-    expansion joins) — pure overhead on a corpus with few exact copies.
-    Since the keyed frame must materialize anyway, one aggregate over the
-    cache decides at build time (AQE-style runtime stats, one bounded
-    driver action, never a hot-path collect): >95% distinct sets → run
-    ``pair_fn`` on all rows directly (same output by construction).
+    Ids must be unique: a group's representative is its min id, and a
+    NULL id never pairs (``collect_list`` skips it, as the direct path's
+    ``id_a < id_b`` join conditions do).
+
+    ADAPTIVE: collapsing costs one extra small shuffle (the set-key
+    aggregate), two caches and two representative lookups — pure
+    overhead on a corpus with few exact copies. Since the keyed frame
+    must materialize anyway, one aggregate over the cache decides at
+    build time (AQE-style runtime stats, one bounded driver action,
+    never a hot-path collect): >95% distinct sets → run ``pair_fn`` on
+    all rows directly (same output by construction).
 
     ``force_collapse`` disables the direct-path gate. Callers whose
     ``pair_fn`` is NOT invariant to duplicate rows must set it: a df-cap
@@ -394,43 +399,42 @@ def collapse_identical_pairs(
             "k"
         ),
     ).transform(_persist_tracked)
-    members = keyed.select("id", "k")
-    reps = members.groupBy("k").agg(F.min("id").alias("id"))
-    # rep_obj is a join product (not cache-backed like the direct
-    # path's base projection) consumed by every pair_fn — persist it
-    # HERE so pair_fns don't have to re-persist their input (they
-    # receive either this cached frame or a projection of the caller's
-    # cached base; reps of a dup-heavy corpus are small by definition).
-    rep_obj = (
-        keyed.join(reps.select("id"), "id", "left_semi")
-        .select("id", "obj")
-        .transform(_persist_tracked)
+    # One aggregate gives each group its representative (min id) AND
+    # its member ids. rep_obj is a join product (not cache-backed like
+    # the direct path's base projection) consumed by every pair_fn —
+    # persist it HERE so pair_fns don't have to re-persist their input
+    # (they receive either this cached frame or a projection of the
+    # caller's cached base; reps of a dup-heavy corpus are small by
+    # definition). The member ids ride on that cache, so the expansion
+    # below reads nothing else: the pairs inside a group come from its
+    # own row, the pairs across groups from one lookup per side. (A join
+    # against a member table would cost a broadcast job per join: AQE
+    # never reuses a broadcast over a cached scan, whose query stage
+    # keeps the scan's own attribute ids.)
+    groups = keyed.groupBy("k").agg(
+        F.min("id").alias("id"), F.collect_list("id").alias("ids")
     )
-    rep_pairs = pair_fn(rep_obj)
+    rep_obj = keyed.join(groups, ["k", "id"]).transform(_persist_tracked)
+    rep_pairs = pair_fn(rep_obj.select("id", "obj"))
 
     intra = (
-        members.alias("m1")
-        .join(
-            members.alias("m2"),
-            (F.col("m1.k") == F.col("m2.k")) & (F.col("m1.id") < F.col("m2.id")),
-        )
-        .select(
-            F.col("m1.id").alias("id_a"),
-            F.col("m2.id").alias("id_b"),
-            *[v.alias(name) for name, v in self_vals.items()],
-        )
+        rep_obj.select(F.explode("ids").alias("id_a"), "ids")
+        .select("id_a", F.explode("ids").alias("id_b"))
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[v.alias(name) for name, v in self_vals.items()])
     )
-    rep2k = reps.select(F.col("id").alias("rid"), "k")
-    x = rep_pairs.join(
-        rep2k.select(F.col("rid").alias("id_a"), F.col("k").alias("ka")), "id_a"
-    ).join(rep2k.select(F.col("rid").alias("id_b"), F.col("k").alias("kb")), "id_b")
+    vals = list(self_vals)
+    ids_a = rep_obj.select(F.col("id").alias("id_a"), F.col("ids").alias("ids_a"))
+    ids_b = rep_obj.select(F.col("id").alias("id_b"), F.col("ids").alias("ids_b"))
     inter_pairs = (
-        x.join(members.select(F.col("id").alias("ma"), F.col("k").alias("ka")), "ka")
-        .join(members.select(F.col("id").alias("mb"), F.col("k").alias("kb")), "kb")
+        rep_pairs.join(ids_a, "id_a")
+        .join(ids_b, "id_b")
+        .select(F.explode("ids_a").alias("ma"), "ids_b", *vals)
+        .select("ma", F.explode("ids_b").alias("mb"), *vals)
         .select(
             F.least("ma", "mb").alias("id_a"),
             F.greatest("ma", "mb").alias("id_b"),
-            *self_vals.keys(),
+            *vals,
         )
     )
     return intra.unionByName(inter_pairs)
@@ -608,8 +612,10 @@ def lsh_candidate_pairs(
 
     # Persist the tiny (id, band_id, band_hash) rows: when the input is
     # itself cached, the two self-join sides otherwise each recompute the
-    # 32-way signature aggregate from the cache (exchange reuse only
-    # kicks in for uncached identical subplans).
+    # 32-way signature aggregate from the cache (AQE does not reuse an
+    # exchange above a cached scan). The cache holds as many partitions
+    # as AQE coalesced the signature shuffle to (the session default
+    # canChangeCachedPlanOutputPartitioning), not shuffle.partitions.
     band_rows = lsh_band_rows(
         df,
         id_col=id_col,

@@ -54,7 +54,7 @@ sides decline the hint and keep the honest shuffle join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -418,18 +418,27 @@ def span_dedup_stats(
 
 
 def _measured_broadcast(df: DataFrame, width, max_bytes: int) -> DataFrame:
-    """localCheckpoint ``df`` (one job — every consumer needs it
-    anyway), MEASURE its unsafe-row bytes via one aggregate over the
-    stored blocks, and broadcast-hint only when ``measured * 2 <=
-    max_bytes`` (2× object-overhead safety factor, the linededup r6
-    protocol). ``max_bytes <= 0`` disables: no checkpoint, no hint."""
+    """localCheckpoint ``df`` (its plan runs once — every consumer
+    needs it anyway), MEASURE its unsafe-row bytes as ``sum(width)``
+    observed on that same checkpoint run (no second job), and
+    broadcast-hint only when ``measured * 2 <= max_bytes`` (2×
+    object-overhead safety factor, the linededup r6 protocol).
+    ``max_bytes <= 0`` disables: no checkpoint, no hint."""
     if max_bytes <= 0:
         return df
-    df = df.localCheckpoint()
-    row = df.agg(F.sum(width).alias("b")).collect()[0]
-    if int(row["b"] or 0) * 2 <= max_bytes:
+    obs = Observation()
+    df = df.observe(obs, F.sum(width).alias("b")).localCheckpoint()
+    if _observed_bytes(obs) * 2 <= max_bytes:
         return F.broadcast(df)
     return df
+
+
+def _observed_bytes(obs) -> int:
+    """The width sum observed on the checkpoint run; a sum over zero
+    rows is NULL, which measures 0. The observation sits at the root of
+    the checkpointed plan, so AQE never prunes it away (an emptied
+    subtree is replaced below it) and its metrics always arrive."""
+    return int(obs.get["b"] or 0)
 
 
 def _unsafe_row_slot(col, dtype) -> "F.Column":
@@ -455,8 +464,9 @@ def _guarded_span_side(
     shuffles the ENTIRE tokenized corpus (measured 6.9 of 6.9 GB total
     at 5M docs with a 267k-doc contaminated set — SCALING.md §span-sf100).
     Realistic contamination/duplication is a small fraction of the
-    corpus, so: localCheckpoint the span aggregate (one job — every
-    downstream plan needs it anyway), MEASURE its unsafe-row width (8B
+    corpus, so: localCheckpoint the span aggregate (the span plan's
+    stages run once — every downstream plan needs them anyway), MEASURE
+    its unsafe-row width on that same run (8B
     bitmap + id slot [octet-measured for string ids] + 16B array
     header + 16B per span struct + ``extra_row_bytes`` for the report's
     stat columns), and broadcast-hint only under ``max_bytes`` with the

@@ -109,23 +109,25 @@ def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §4.1 — keep hot per-token work in codegen): explode
     # the RAW split and filter AFTER the Generate instead of an
     # interpreted higher-order F.filter over the token array. The
-    # post-Generate WHERE is whole-stage codegen; with the cheap filter
-    # internals (InSet stopwords, translate numeric test — see
-    # tokenize._post_filter) this measured 24.5 → 15.7 CPU-s (−36%) at
+    # post-Generate WHERE is whole-stage codegen; it is the tokenizer's
+    # own per-token predicate (InSet stopwords, translate numeric test —
+    # tokenize._token_keep), and this measured 24.5 → 15.7 CPU-s (−36%) at
     # sf10, output bit-equal. explode_outer, not explode:
     # InferFiltersFromGenerate would otherwise push an inferred
     # size(split(...)) > 0 filter below the fan_out exchange and
     # re-evaluate the split per doc (the graph-family r12/r13 lesson);
     # the WHERE is null-rejecting, so the NULL rows outer-explode adds
     # for null/empty text drop exactly where explode dropped them.
-    from bigdataproject_spark.functions.tokenize import _SPLIT_PATTERN
+    from bigdataproject_spark.functions.tokenize import (
+        _SPLIT_PATTERN,
+        DEFAULT_MIN_LEN,
+        _token_keep,
+    )
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     toks = F.split(F.lower(F.col("text")), _SPLIT_PATTERN)
     tokens = docs.select(F.explode_outer(toks).alias("word")).where(
-        (F.length("word") >= 2)
-        & ~F.col("word").isin(*DEFAULT_STOPWORDS)
-        & (F.translate("word", "0123456789", "") != F.lit(""))
+        _token_keep(F.col("word"), DEFAULT_STOPWORDS, DEFAULT_MIN_LEN, True)
     )
     return (
         tokens.groupBy("word")

@@ -50,6 +50,28 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn's result, the number of Spark jobs it
+    started): the jobs run under a job group of their own, counted once
+    the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-budget probe")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -105,6 +105,42 @@ def test_tokenize_rejects_min_len_below_one():
             tokenize_expr("text", min_len=bad)
 
 
+def test_word_count_plan_equals_inline_filter(spark, sf_dir):
+    """q_word_count's optimized plan is the plan of the inline token
+    filter it used before taking the predicate from tokenize.py (kept
+    here as the reference), attribute ids aside."""
+    import re
+
+    from bigdataproject_spark.functions.tokenize import (
+        _SPLIT_PATTERN,
+        DEFAULT_STOPWORDS,
+    )
+    from bigdataproject_spark.queries_reference import q_word_count
+    from bigdataproject_spark.sources.readers import fan_out, load_table
+
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    toks = F.split(F.lower(F.col("text")), _SPLIT_PATTERN)
+    inline = (
+        docs.select(F.explode_outer(toks).alias("word"))
+        .where(
+            (F.length("word") >= 2)
+            & ~F.col("word").isin(*DEFAULT_STOPWORDS)
+            & (F.translate("word", "0123456789", "") != F.lit(""))
+        )
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("frequency"))
+        .orderBy(F.desc("frequency"), F.asc("word"))
+        .limit(500)
+    )
+
+    def plan(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    assert "explode" in plan(inline)
+    assert plan(q_word_count(spark, sf_dir)) == plan(inline)
+
+
 def test_tokenize_null(spark):
     df = spark.createDataFrame([Row(text=None)], "text string")
     assert df.select(tokenize_expr("text")).collect()[0][0] == []

@@ -12,8 +12,6 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -156,37 +154,24 @@ def _index(spark, tmp_path, n_rows=200):
     return idx, spark.read.parquet(str(d / "q")), spark.read.parquet(str(d / "delta"))
 
 
-def _count_jobs(spark, fn):
-    sc = spark.sparkContext
-    group = f"ivf-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "IVF job-budget probe")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_search_job_budget(spark, tmp_path):
+def test_search_job_budget(spark, tmp_path, count_jobs):
     idx, q, _ = _index(spark, tmp_path)
-    df, build = _count_jobs(
-        spark,
+    df, build = count_jobs(
         lambda: ivf_topk_indexed(spark, idx, q, k=5, n_probe=3, impl="blas", **KW),
     )
     # 1 schema inference of the cells table (its id/vector types vary),
     # 1 centroid collect (fixed schema, sorted driver-side),
     # 1 probe-row collect (map-only; the rows carry the probed cells)
     assert build == 3
-    rows, run = _count_jobs(spark, df.collect)
+    rows, run = count_jobs(df.collect)
     # the candidate-ranking window: its shuffle map stage + result stage
     assert run == 2
     assert len(rows) == 20 * 5
 
 
-def test_append_job_budget(spark, tmp_path):
+def test_append_job_budget(spark, tmp_path, count_jobs):
     idx, _, delta = _index(spark, tmp_path)
-    rep, n = _count_jobs(spark, lambda: ivf_append_index(delta, idx, **KW))
+    rep, n = count_jobs(lambda: ivf_append_index(delta, idx, **KW))
     # 1 centroid collect; 2 for the clustered cells write (exchange map
     # stage + write; n and sum_d2 observed on it); 1 stats row write
     # from a one-partition source; 2 for the ledger's four-sum
@@ -196,10 +181,10 @@ def test_append_job_budget(spark, tmp_path):
     assert rep["n_appended"] == 50
 
 
-def test_compact_job_budget(spark, tmp_path):
+def test_compact_job_budget(spark, tmp_path, count_jobs):
     idx, _, delta = _index(spark, tmp_path)
     ivf_append_index(delta, idx, **KW)
-    rep, n = _count_jobs(spark, lambda: ivf_compact_index(spark, idx))
+    rep, n = count_jobs(lambda: ivf_compact_index(spark, idx))
     # 1 cells schema inference; 1 centroid collect (n_cells for the
     # files-per-cell target); 3 for the rewrite (dedup exchange,
     # clustering exchange, write; row counts before and after the
