@@ -19,7 +19,6 @@ from bigdataproject_spark.operators.dedup import (
     minhash_lsh_dedup_pairs,
     portable_hashed_shingles,
     simhash_neardup_pairs,
-    word_shingles,
 )
 from bigdataproject_spark.operators.decontam import ngram_contamination
 from bigdataproject_spark.operators.sampling import stratified_sample_filter

@@ -45,7 +45,12 @@ def spark():
     s = get_spark(
         "bigdataproject-tests",
         master="local[4]",
-        extra_conf={"spark.sql.shuffle.partitions": "4"},
+        extra_conf={
+            "spark.sql.shuffle.partitions": "4",
+            # the status REST API, read by the measurement harness
+            # (tools/sweeplib.py) under test
+            "spark.ui.enabled": "true",
+        },
     )
     yield s
 

@@ -11,6 +11,8 @@ arithmetic so a refactor can't silently diverge from the DuckDB oracles
 from __future__ import annotations
 
 import hashlib
+import itertools
+import random
 
 import pytest
 
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 
 from bigdataproject_spark.operators.dedup import (
     MINHASH_P,
+    hashed_word_shingles,
     lsh_band_rows,
     minhash_coefficients,
     minhash_lsh_dedup_pairs,
@@ -127,6 +130,49 @@ def test_minhash_md5_pipeline_verifies_jaccard(docs_df):
     }
     assert pairs[(1, 5)] == 1.0
     assert all(j >= 0.5 for j in pairs.values())
+
+
+def test_hash_families_find_the_same_verified_pairs(spark):
+    """Both MinHash paths stay (sf10-class receipt in ROADMAP direction
+    3: the portable shingle kernel costs ~4x the xxhash64 one), so pin
+    that they agree. On exact copies, one-token edits (Jaccard 27/29)
+    and unrelated docs, each path's verified pairs equal the brute-force
+    Jaccard pairs. A pair at J = 27/29 misses all 8 bands of 4 rows with
+    probability (1 - J^4)^8 < 2e-5."""
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(50)]
+    rows = []
+    for base in range(12):
+        toks = [rng.choice(vocab) for _ in range(30)]
+        rows += [
+            (base * 10 + 1, toks),
+            (base * 10 + 2, list(toks)),  # exact copy
+            (base * 10 + 3, toks[:-1] + ["edited"]),  # one-token edit
+        ]
+    df = spark.createDataFrame(rows, "id bigint, tokens array<string>")
+
+    def shingles(t):
+        return {" ".join(t[i : i + 3]) for i in range(len(t) - 2)}
+
+    expect = {}
+    for (a, ta), (b, tb) in itertools.combinations(rows, 2):
+        sa, sb = shingles(ta), shingles(tb)
+        if len(sa & sb) / len(sa | sb) >= 0.8:
+            expect[(a, b)] = len(sa & sb) / len(sa | sb)
+    assert len(expect) == 36  # 3 pairs per base doc
+    for kernel, family in (
+        (hashed_word_shingles, "murmur3"),
+        (portable_hashed_shingles, "md5"),
+    ):
+        sh = df.select("id", kernel("tokens", 3).alias("sh"))
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in minhash_lsh_dedup_pairs(
+                sh, id_col="id", shingles_col="sh", threshold=0.8,
+                hash_family=family,
+            ).collect()
+        }
+        assert got == pytest.approx(expect), family
 
 
 def test_minhash_coefficients_deterministic_and_in_field():

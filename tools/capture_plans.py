@@ -14,34 +14,21 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
+from bench import HEADLINE  # noqa: E402
 from bigdataproject_spark.queries import registry  # noqa: E402
 from bigdataproject_spark.queries_pipeline import EXTRA_PARITY  # noqa: E402
 from bigdataproject_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_revenue",
-    "q5_region_revenue",
-    "energy_timeline",
-    "sessionize_events",
-    "topk_per_customer",
-    "word_count",
-    "graph_edges",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_brute_topk",
-    "textstats_quality",
-]
-
 
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:] or HEADLINE
-    outdir = f"/root/repo/plans/{tag}"
+    outdir = os.path.join(REPO_ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("capture-plans")
     reg = {**EXTRA_PARITY, **registry()}

@@ -22,59 +22,22 @@ Each candidate is a zero-arg callable returning a DataFrame; the
 harness warms every candidate once (JVM/codegen/cache), then runs
 them INTERLEAVED for ``rounds`` rounds (interleaving distributes any
 slow box drift across candidates instead of biasing whoever ran
-last), forcing each with ``.count()`` and reading CPU/shuffle deltas
-from the status REST API. The session must be built with
-``spark.ui.enabled=true`` and a high ``spark.ui.retainedStages`` —
-:func:`ab_session_conf` returns the right extra_conf.
+last), forcing each with ``.count()`` and reading CPU/shuffle/job
+deltas with ``sweeplib.stage_totals`` (the status REST API). The
+session must be built with the status API on and every stage retained:
+``get_spark(extra_conf=sweeplib.STATUS_CONF)``.
 
 Decide on ``cpu_s`` first, ``shuffle_write_mb`` second, scan count
 (read from the plans) third; treat ``wall_s`` as color only.
 """
 from __future__ import annotations
 
-import json
+import os
+import sys
 import time
-import urllib.request
 
-
-def ab_session_conf() -> dict[str, str]:
-    """extra_conf for ``get_spark`` that enables the status API with
-    enough retained stages that long A/Bs never lose history."""
-    return {"spark.ui.enabled": "true", "spark.ui.retainedStages": "100000"}
-
-
-def _totals_once(base_url: str) -> tuple[int, int, int]:
-    """(executorCpuTime ns, shuffleWriteBytes, n completed stages)."""
-    apps = json.load(
-        urllib.request.urlopen(f"{base_url}/api/v1/applications", timeout=30)
-    )
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{base_url}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=30,
-        )
-    )
-    cpu = sum(s.get("executorCpuTime", 0) for s in stages)
-    sw = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    return cpu, sw, len(stages)
-
-
-def _totals(base_url: str) -> tuple[int, int]:
-    """Stable (cpu, shuffle) snapshot. The AppStatusListener drains an
-    ASYNC event queue — reading immediately after an action returns can
-    miss just-finished stages, which then bleed into the NEXT
-    candidate's delta (exactly the skew this harness exists to avoid).
-    Poll until two consecutive reads agree (or a bounded number of
-    attempts) before trusting the snapshot."""
-    prev = _totals_once(base_url)
-    for _ in range(20):
-        time.sleep(0.25)
-        cur = _totals_once(base_url)
-        if cur == prev:
-            return cur[0], cur[1]
-        prev = cur
-    return prev[0], prev[1]
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from sweeplib import stage_totals, window_metrics  # noqa: E402
 
 
 def cpu_ab(
@@ -82,7 +45,8 @@ def cpu_ab(
     force: str = "count",
 ):
     """Run the interleaved CPU A/B. Returns {label: [{cpu_s, wall_s,
-    shuffle_write_mb, rows}, ...]} with one entry per round.
+    shuffle_write_mb, shuffle_read_mb, jobs, stages, tasks, rows}, ...]}
+    with one entry per round.
 
     ``candidates`` maps label → zero-arg callable returning a
     DataFrame (built fresh per call so each run replans; captured
@@ -95,12 +59,6 @@ def cpu_ab(
     projection under a count and the A/B measures an empty scan
     (guide §1.4) — pass ``force="noop"`` there; rows is then -1
     (the noop sink reports no count)."""
-    base_url = spark.sparkContext.uiWebUrl
-    if base_url is None:
-        raise RuntimeError(
-            "status API disabled — build the session with "
-            "get_spark(extra_conf=ab_session_conf())"
-        )
     def _force(df) -> int:
         if force == "noop":
             df.write.mode("overwrite").format("noop").save()
@@ -113,17 +71,12 @@ def cpu_ab(
     out: dict = {label: [] for label in candidates}
     for _ in range(rounds):
         for label, fn in candidates.items():
-            c0, s0 = _totals(base_url)
-            t0 = time.time()
+            t0 = stage_totals(spark)
+            start = time.time()
             n = _force(fn())
-            wall = time.time() - t0
-            c1, s1 = _totals(base_url)
+            wall = time.time() - start
+            t1 = stage_totals(spark)
             out[label].append(
-                {
-                    "cpu_s": round((c1 - c0) / 1e9, 1),
-                    "wall_s": round(wall, 2),
-                    "shuffle_write_mb": round((s1 - s0) / 1e6, 1),
-                    "rows": n,
-                }
+                {**window_metrics(t0, t1), "wall_s": round(wall, 2), "rows": n}
             )
     return out

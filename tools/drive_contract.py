@@ -4,11 +4,12 @@ sorted-column value hash."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdataproject_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402

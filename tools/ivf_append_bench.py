@@ -20,7 +20,7 @@ import shutil
 import sys
 import time
 
-from sweeplib import force  # noqa: E402 (sys.path bootstrap)
+from sweeplib import control_sec, control_samples, force  # noqa: E402 (sys.path bootstrap)
 
 from pyspark.sql import functions as F
 
@@ -49,16 +49,7 @@ def main() -> None:
     # r9 sweeps): round-over-round maintenance wall deltas divide by
     # this median before being read as regressions. Skipped (null) for
     # partial SF dirs without lineitem.
-    import os
-    import statistics
-
-    from sweeplib import control_samples
-
-    ctl = (
-        round(statistics.median(control_samples(spark, sf_dir)), 3)
-        if os.path.exists(f"{sf_dir}/lineitem.parquet")
-        else None
-    )
+    ctl = control_sec(control_samples(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     idc = "emb_id" if "emb_id" in emb.columns else emb.columns[0]
     vc = "embedding" if "embedding" in emb.columns else emb.columns[1]

@@ -9,8 +9,9 @@ Usage: python tools/pipeline_bench.py SF_DIR [WORK_DIR]
 Each stage is materialized to parquet in WORK_DIR (default
 /tmp/pipe_bench) exactly as a production pipeline would checkpoint
 between major stages, so stage timings are additive and each stage's
-shuffle-byte delta is its own. Prints one JSON line with per-stage
-{sec, shuffle_write_mb, rows_out}.
+metrics (CPU, shuffle bytes, jobs, stages, tasks) are its own.
+Prints one JSON line with per-stage {sec, cpu_s, shuffle_write_mb,
+shuffle_read_mb, jobs, stages, tasks, rows_out}.
 
 On the synthetic corpus every document has K exact copies (the
 make_scale property), so line-granularity dedup degenerates to
@@ -25,7 +26,11 @@ import shutil
 import sys
 import time
 
-from sweeplib import shuffle_totals  # noqa: E402 (sys.path bootstrap)
+from sweeplib import (  # noqa: E402 (sys.path bootstrap lives here)
+    STATUS_CONF,
+    stage_totals,
+    window_metrics,
+)
 
 from pyspark.sql import functions as F
 
@@ -48,25 +53,18 @@ def main() -> None:
     sf_dir = sys.argv[1]
     work = sys.argv[2] if len(sys.argv) > 2 else "/tmp/pipe_bench"
     shutil.rmtree(work, ignore_errors=True)
-    spark = get_spark(
-        "pipeline-bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    base_url = spark.sparkContext.uiWebUrl
+    spark = get_spark("pipeline-bench", extra_conf=STATUS_CONF)
     out: dict[str, dict] = {}
 
     def stage(name: str, fn) -> None:
-        w0, _ = shuffle_totals(base_url)
+        s0 = stage_totals(spark)
         t0 = time.perf_counter()
         rows = fn()
         sec = time.perf_counter() - t0
-        w1, _ = shuffle_totals(base_url)
+        s1 = stage_totals(spark)
         out[name] = {
             "sec": round(sec, 1),
-            "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
+            **window_metrics(s0, s1),
             "rows_out": rows,
         }
         print(f"  {name}: {out[name]}", file=sys.stderr, flush=True)

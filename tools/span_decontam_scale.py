@@ -12,7 +12,7 @@ one is the slope a production decontam job actually rides.
 
 Expects a make-scale-style corpus whose doc_id = base_id + i*100M
 (tools/make_scale.py / the sf100span builder). Prints one JSON line:
-control, eval/train row counts, wall, shuffle bytes.
+control, eval/train row counts, wall, CPU, shuffle bytes, job counts.
 
 Usage: python tools/span_decontam_scale.py SF_DIR [TIMEOUT_S]
 """
@@ -20,15 +20,17 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
 from sweeplib import (  # noqa: E402 (sys.path bootstrap lives here)
+    STATUS_CONF,
     apply_scale_env,
+    control_sec,
     control_samples,
     force as _force,
-    shuffle_totals,
+    stage_totals,
+    window_metrics,
 )
 
 from pyspark.sql import functions as F
@@ -46,19 +48,8 @@ OFF = 100_000_000  # make_scale.py's copy shift
 def main() -> None:
     sf_dir = sys.argv[1]
     apply_scale_env(sf_dir, os.environ)
-    spark = get_spark(
-        "span-decontam-scale",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    base_url = spark.sparkContext.uiWebUrl
-    ctl = (
-        round(statistics.median(control_samples(spark, sf_dir)), 3)
-        if os.path.exists(f"{sf_dir}/lineitem.parquet")
-        else None
-    )
+    spark = get_spark("span-decontam-scale", extra_conf=STATUS_CONF)
+    ctl = control_sec(control_samples(spark, sf_dir))
     docs = load_table(spark, sf_dir, "documents")
     # eval = base copy (doc_id < OFF) of ~5% of distinct texts — the
     # contamination_check md5-keyrange convention applied to BASE ids
@@ -68,7 +59,7 @@ def main() -> None:
     n_eval, n_train = ev.count(), train.count()
     ref = reference_gram_keys(ev, text_col="text", k=8, hash_family="xxhash64")
 
-    w0, r0 = shuffle_totals(base_url)
+    s0 = stage_totals(spark)
     t0 = time.perf_counter()
     _force(
         remove_duplicate_spans(
@@ -81,7 +72,7 @@ def main() -> None:
         )
     )
     sec = time.perf_counter() - t0
-    w1, r1 = shuffle_totals(base_url)
+    s1 = stage_totals(spark)
     print(
         json.dumps(
             {
@@ -91,8 +82,7 @@ def main() -> None:
                 "n_eval_docs": n_eval,
                 "n_train_docs": n_train,
                 "sec": round(sec, 2),
-                "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
-                "shuffle_read_mb": round((r1 - r0) / 1e6, 1),
+                **window_metrics(s0, s1),
                 "normalized_sec": round(sec / ctl, 1) if ctl else None,
             }
         )

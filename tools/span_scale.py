@@ -1,10 +1,11 @@
 """Scale rehearsal for the substring-span dedup family
-(operators/spandedup.py) — subset_sweep.py's measurement protocol
-(frozen control, per-query shuffle deltas, watchdog) over the three
-entry points that are NOT registry queries, at a make_scale.py corpus
-where every document has K exact copies (worst case: every gram of
-every doc is duplicated, so the post-filter hit volume equals the gram
-volume — the honest upper bound for the doc_id exchange).
+(operators/spandedup.py) — sweep.py's measurement protocol (frozen
+control, per-query shuffle deltas, watchdog: sweeplib.run_cases) over
+the three entry points that are NOT registry queries, at a
+make_scale.py corpus where every document has K exact copies (worst
+case: every gram of every doc is duplicated, so the post-filter hit
+volume equals the gram volume — the honest upper bound for the doc_id
+exchange).
 
 Usage: python tools/span_scale.py SF_DIR [TIMEOUT_S]
 """
@@ -12,17 +13,14 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import threading
-import time
 
 from sweeplib import (  # noqa: E402 (sys.path bootstrap lives here)
-    active_stage_count,
+    STATUS_CONF,
     apply_scale_env,
+    control_sec,
     control_samples,
-    force as _force,
-    shuffle_totals,
+    run_cases,
 )
 
 from bigdataproject_spark.operators.spandedup import (
@@ -37,19 +35,8 @@ def main() -> None:
     sf_dir = sys.argv[1]
     timeout_s = float(sys.argv[2]) if len(sys.argv) > 2 else 900.0
     apply_scale_env(sf_dir, os.environ)
-    spark = get_spark(
-        "span-scale",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    sc = spark.sparkContext
-    base_url = sc.uiWebUrl
-
-    ctl: list[float] | None = None
-    if os.path.exists(f"{sf_dir}/lineitem.parquet"):
-        ctl = control_samples(spark, sf_dir)
+    spark = get_spark("span-scale", extra_conf=STATUS_CONF)
+    ctl = control_samples(spark, sf_dir)
 
     def docs():
         return load_table(spark, sf_dir, "documents")
@@ -91,63 +78,14 @@ def main() -> None:
         "span_decontam_xxhash64": lambda: _decontam_case(docs()),
     }
 
-    out: dict[str, dict] = {}
-    leaked: list[str] = []
-    for name, build in cases.items():
-        w0, r0 = shuffle_totals(base_url)
-        result: dict = {}
-        err: list[BaseException] = []
-
-        def run(build=build, group=name) -> None:
-            sc.setJobGroup(group, group, interruptOnCancel=True)
-            try:
-                _force(build())
-            except BaseException as ex:  # noqa: BLE001 — recorded below
-                err.append(ex)
-            finally:
-                sc.setJobGroup("", "")
-
-        t0 = time.perf_counter()
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-        th.join(timeout_s)
-        sec = time.perf_counter() - t0
-        if th.is_alive():
-            sc.cancelJobGroup(name)
-            th.join(60)
-            drain_t0 = time.monotonic()
-            while (
-                active_stage_count(base_url) > 0
-                and time.monotonic() - drain_t0 < 120
-            ):
-                time.sleep(2)
-            result = {"timeout": True, "sec": round(sec, 1)}
-            if th.is_alive():
-                leaked.append(name)
-                result["leaked_thread"] = True
-        elif err:
-            result = {"error": f"{type(err[0]).__name__}: {err[0]}"[:300]}
-        else:
-            w1, r1 = shuffle_totals(base_url)
-            result = {
-                "sec": round(sec, 2),
-                "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
-                "shuffle_read_mb": round((r1 - r0) / 1e6, 1),
-            }
-        if leaked and name not in leaked:
-            result["tainted_by"] = list(leaked)
-        out[name] = result
-        print(f"  {name}: {result}", file=sys.stderr, flush=True)
-
+    out, leaked = run_cases(spark, cases, timeout_s)
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "timeout_s": timeout_s,
                 "leaked_threads": leaked,
-                "control_sec": (
-                    round(statistics.median(ctl), 3) if ctl else None
-                ),
+                "control_sec": control_sec(ctl),
                 "queries": out,
                 "total_sec": round(
                     sum(q.get("sec", 0.0) for q in out.values()), 1
