@@ -17,7 +17,9 @@ high-entropy (band_id, band_hash) key — the batch side is small, so
 AQE broadcasts it and the corpus-side table is scanned once, never
 shuffled. The verify joins touch only candidate ids (semi-join-sized
 reads). State lives entirely in parquet — no driver memory, resumable
-by construction, and `append_to_index` keeps it monotone.
+by construction, and `accept_batch` keeps it monotone. On disk the
+index is the `bands` and `shingles` tables in the versioned layout of
+operators/versioned.py.
 """
 
 from __future__ import annotations
@@ -68,8 +70,7 @@ def write_minhash_index(
     streaming/index_stream.py), so a crash between the two APPEND
     writes leaves only harmless orphan band rows, never a
     claimed-but-absent membership. ``lease_owner`` (default: this
-    applicationId) gates the healing of pre-versioned crash debris on
-    the append path.
+    applicationId) is the writer lease a rebuild holds.
 
     REBUILD atomicity (r10, closing the r8-end driver ADVICE window by
     construction): on an already-versioned index a rebuild writes BOTH
@@ -83,9 +84,10 @@ def write_minhash_index(
     pointers, healed by the next publish. The crashed rebuild still
     leaves its lease behind (same ``lease_owner`` steals it back;
     appends from other owners fail loudly against it). A NEVER-
-    versioned (legacy flat) index keeps the r7 in-place overwrite —
+    versioned (generation-0) index is overwritten in place —
     documented reader-unsafe during the rewrite; compact once to enter
-    the versioned layout if rebuilds must be concurrent with readers.
+    the versioned generations if rebuilds must be concurrent with
+    readers.
 
     The same (num_hashes, bands, hash_family) MUST be used for every
     write and query against one index path — band keys from different
@@ -95,7 +97,6 @@ def write_minhash_index(
     from bigdataproject_spark.operators.versioned import (
         TableMissingError,
         publish_pair,
-        table_live_dir,
         table_overwrite_target,
         table_read_dir,
     )
@@ -113,10 +114,10 @@ def write_minhash_index(
     prep = _prepared(docs, id_col=id_col, shingles_col=shingles_col)
     if append:
         band_df.write.mode("append").parquet(
-            table_live_dir(spark, path, "bands", owner)
+            table_read_dir(spark, path, "bands")
         )
         prep.write.mode("append").parquet(
-            table_live_dir(spark, path, "shingles", owner)
+            table_read_dir(spark, path, "shingles")
         )
         return
     # full REBUILD: runs under the writer lease — a rebuild racing a
@@ -154,7 +155,6 @@ def _append_band_rows(
     num_hashes: int,
     bands: int,
     hash_family: str,
-    owner: str,
 ) -> None:
     """Append exactly the MISSING band rows for the already-member
     ``heal_ids`` (no shingle / membership rows) — the heal half of the
@@ -174,12 +174,12 @@ def _append_band_rows(
     replay leaves the bands table row-identical. The missing set is
     localCheckpoint'd so the append plan does not read the directory it
     is appending to."""
-    from bigdataproject_spark.operators.versioned import table_live_dir
+    from bigdataproject_spark.operators.versioned import table_read_dir
     from bigdataproject_spark.session import release_local_checkpoint
 
     spark = heal_ids.sparkSession
-    live = table_live_dir(spark, path, "bands", owner)
-    live_sh = table_live_dir(spark, path, "shingles", owner)
+    live = table_read_dir(spark, path, "bands")
+    live_sh = table_read_dir(spark, path, "shingles")
     ids = F.broadcast(heal_ids.select(F.col(id_col).alias("id")).distinct())
     stored_docs = spark.read.parquet(live_sh).join(ids, "id", "left_semi")
     want = lsh_band_rows(
@@ -437,7 +437,6 @@ def accept_batch(
                 num_hashes=num_hashes,
                 bands=bands,
                 hash_family=hash_family,
-                owner=owner,
             )
     finally:
         from bigdataproject_spark.session import release_local_checkpoint
@@ -504,29 +503,28 @@ def compact_index(
     Crash-safe by construction: the live generation is never touched —
     a crash before a flip leaves an orphan next-generation dir a later
     run skips past; a crash inside the (fallback, non-atomic) flip is
-    covered by read resolution's newest-complete rule. Pre-versioned
-    (rename-aside) crash debris is healed on entry under the held
-    lease. Returns per-table {files_before, files_after, rows}.
+    covered by read resolution's newest-complete rule. Returns
+    per-table {files_before, files_after, rows}.
     """
     from bigdataproject_spark.operators.lease import acquire_lease, release_lease
 
     owner = lease_owner or spark.sparkContext.applicationId
     acquire_lease(spark, path, owner)
     try:
-        return _compact_index_leased(spark, path, num_files, owner)
+        return _compact_index_leased(spark, path, num_files)
     finally:
         release_lease(spark, path, owner)
 
 
 def _compact_index_leased(
-    spark: SparkSession, path: str, num_files: int | None, owner: str
+    spark: SparkSession, path: str, num_files: int | None
 ) -> dict[str, dict[str, int]]:
     """:func:`compact_index` body, lease already held."""
     from bigdataproject_spark.operators.versioned import (
         n_parquet_files,
         publish_version,
-        table_live_dir,
         table_overwrite_target,
+        table_read_dir,
     )
 
     jvm = spark._jvm
@@ -562,16 +560,11 @@ def _compact_index_leased(
             if st.getPath().getName().endswith(".parquet")
         )
 
+    # resolve both tables first: a failure leaves the index untouched
+    prevs = {t: table_read_dir(spark, path, t) for t in ("shingles", "bands")}
     stats: dict[str, dict[str, int]] = {}
     for table, keys in (("shingles", ["id"]), ("bands", ["band_hash"])):
-        # table_live_dir heals pre-versioned (rename-aside) crash
-        # debris under the held lease; remaining __compacting/__old
-        # leftovers are stale (incomplete write, or already-recovered
-        # twin) — clear them.
-        prev = table_live_dir(spark, path, table, owner)
-        fs.delete(Path(f"{path}/{table}__compacting"), True)
-        fs.delete(Path(f"{path}/{table}__old"), True)
-
+        prev = prevs[table]
         snap = _part_files(prev)
         # an empty-but-valid table (ensure_index bootstraps 0-row
         # frames) can have no part files at all — read the dir so the
@@ -641,11 +634,10 @@ def index_health(spark: SparkSession, path: str) -> dict:
     from bigdataproject_spark.operators.versioned import (
         TableMissingError,
         n_parquet_files,
+        pair_versions,
         publish_cadence,
         table_read_dir,
     )
-
-    from bigdataproject_spark.operators.versioned import pair_versions
 
     out: dict = {}
     for table in ("bands", "shingles"):

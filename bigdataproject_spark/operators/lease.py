@@ -3,9 +3,9 @@
 The IVF index (operators/simsearch.py) and the minhash dedup index
 (operators/dedup_index.py) both assume ONE writer: appends are
 idempotent only because the store is unchanged between a crash and its
-replay, and compaction's rename-aside swap has a window in which a
+replay, and compaction's generation flip has a window in which a
 concurrent append's delta — written between the live-dir snapshot and
-the swap — would be silently dropped. Inside a streaming foreachBatch
+the flip — would be silently dropped. Inside a streaming foreachBatch
 that single-writer assumption holds by construction; NOTHING stops a
 second driver from appending during another driver's compaction. This
 module makes that failure loud instead of silent.

@@ -740,9 +740,8 @@ def ivf_write_index(
     query reads n_probe/n_centroids of the corpus bytes. Writes the
     ``cells`` table (neighbor_id, cv, cn, cell) with the centroid
     table (cell, ctr) PAIRED inside it (``_centroids`` — readers
-    resolve quantizer and partitioning from one generation dir; a flat
-    ``{path}/centroids`` legacy/introspection copy is also refreshed),
-    and the ``stats`` ledger (kind, n_rows, sum_d2 — the build-time
+    resolve quantizer and partitioning from one generation dir), and
+    the ``stats`` ledger (kind, n_rows, sum_d2 — the build-time
     quantization cost :func:`ivf_append_index` measures its drift
     against). ``cells`` and ``stats`` live in the versioned layout of
     operators/versioned.py: flat ``{path}/cells`` on a fresh path,
@@ -788,7 +787,7 @@ def _overwrite_cells_and_stats(
     stats row, each written to its overwrite target and published when
     the table is already versioned — so a rebuild over a compacted
     index never disturbs the generation an external searcher is
-    reading (a never-compacted index keeps the flat legacy layout).
+    reading (a never-compacted index is rewritten in place).
     The whole rewrite runs under the writer LEASE: a rebuild racing a
     lease-holding compaction would compute the same next generation
     number and the two writers would tear each other's files (r8
@@ -796,10 +795,7 @@ def _overwrite_cells_and_stats(
     the index already follows. ``write_cells`` is called with the
     concrete target dir; ``stats`` is ``(n, sum_d2)`` or a callable
     evaluated AFTER the cells write (the observe piggyback needs the
-    write to have run). After the versioned publishes, the flat
-    ``{path}/centroids`` legacy/introspection copy is refreshed —
-    outside the paired-read path, so its overwrite window only affects
-    pre-r8 readers."""
+    write to have run)."""
     from bigdataproject_spark.operators.lease import acquire_lease, release_lease
     from bigdataproject_spark.operators.versioned import (
         TableMissingError,
@@ -819,35 +815,15 @@ def _overwrite_cells_and_stats(
                 return None
 
         c_prev = _prev("cells")
-        # BACKFILL the paired copy into the generation being superseded
-        # when it predates the paired layout (a pre-r8 index's first
-        # rebuild): its grace-window readers would otherwise fall back
-        # to the flat {path}/centroids, which this rebuild is about to
-        # overwrite with the NEW quantizer — old partitioning probed
-        # with new centroids, silently wrong neighbors for the whole
-        # transition. The flat table still holds the OLD (matching)
-        # quantizer at this instant, so copy it in before anything else.
-        if c_prev is not None:
-            jvm = spark._jvm
-            HPath = jvm.org.apache.hadoop.fs.Path
-            fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-            paired = f"{c_prev}/{_CENTROIDS_SUBDIR}"
-            flat = f"{path}/centroids"
-            if not fs.exists(HPath(f"{paired}/_SUCCESS")) and fs.exists(
-                HPath(flat)
-            ):
-                _copy_centroids(spark, flat, paired)
         c_tgt, c_ver = table_overwrite_target(spark, path, "cells")
         write_cells(c_tgt)
-        centroids_df = _one_partition_df(spark, centroids, _CENTROIDS_SCHEMA)
-        centroids_df.write.mode("overwrite").parquet(
-            f"{c_tgt}/{_CENTROIDS_SUBDIR}"
-        )
+        ctr_df = _one_partition_df(spark, centroids, _CENTROIDS_SCHEMA)
+        ctr_df.write.mode("overwrite").parquet(f"{c_tgt}/{_CENTROIDS_SUBDIR}")
         # the generation's completeness marker, created only AFTER the
         # paired quantizer is on disk (write_cells deferred it): a
         # complete generation always carries its _centroids, so the
-        # newest-complete fallback can never pair fresh cells with the
-        # stale flat copy (r8 review finding).
+        # newest-complete fallback can never resolve fresh cells
+        # without their quantizer (r8 review finding).
         _touch_success(spark, c_tgt)
         if c_ver is not None:
             publish_version(spark, path, "cells", c_ver, c_prev)
@@ -857,7 +833,6 @@ def _overwrite_cells_and_stats(
         _write_index_stats(spark, s_tgt, kind="build", n_rows=n, sum_d2=sum_d2)
         if s_ver is not None:
             publish_version(spark, path, "stats", s_ver, s_prev)
-        centroids_df.write.mode("overwrite").parquet(f"{path}/centroids")
     finally:
         release_lease(spark, path, owner)
 
@@ -907,8 +882,7 @@ def _write_cells(
     write the paired ``_centroids`` copy NEXT and create the marker
     themselves, so a generation can never look complete without its
     quantizer — a crash between the two writes leaves an incomplete
-    dir resolution ignores, not an orphan that pairs new cells with
-    the stale flat centroids)."""
+    dir resolution ignores, not a complete orphan without centroids)."""
     salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(_IVF_FILES_PER_CELL))
     w = (
         assigned.withColumn("_salt", salt)
@@ -960,12 +934,7 @@ def _one_partition_df(spark, rows: list, schema: str) -> DataFrame:
 def _read_stats(spark, path: str) -> DataFrame:
     """The stats ledger as a DataFrame — explicit schema, so pre-r7
     three-column files read with a NULL ledger_id. Pure READER:
-    resolution (operators/versioned.py) never renames — a pre-versioned
-    crash's recovery copy (``stats`` missing, complete copy set aside)
-    is read IN PLACE, so a drift poll racing a live compaction cannot
-    disturb the compactor's own swap (the r7 reader-heal race). Writer
-    paths heal that debris through
-    :func:`~bigdataproject_spark.operators.versioned.table_live_dir`."""
+    resolution (operators/versioned.py) never renames."""
     from bigdataproject_spark.operators.versioned import table_read_dir
 
     return spark.read.schema(_INDEX_STATS_SCHEMA).parquet(
@@ -989,10 +958,7 @@ def _ledger_id_recorded(spark, path: str, ledger_id: str) -> bool:
 # so the quantizer a reader resolves is ATOMICALLY PAIRED with the cell
 # partitioning it produced — a rebuild publishing mid-search can never
 # make a searcher assign probes with one generation's centroids against
-# another generation's cells (r8 review finding). The flat
-# ``{path}/centroids`` table is still written by every rebuild (legacy
-# readers, introspection, pre-r8 indexes) and is the fallback when the
-# resolved generation predates the paired copy.
+# another generation's cells (r8 review finding).
 _CENTROIDS_SUBDIR = "_centroids"
 
 
@@ -1003,16 +969,21 @@ def _touch_success(spark, dirpath: str) -> None:
 
 
 def _centroids_dir(spark, path: str, cells_dir: str) -> str:
-    """The centroid table paired with ONE concrete cells generation:
-    ``{cells_dir}/_centroids`` when COMPLETE (its own ``_SUCCESS`` — a
-    torn paired write must fall through, not error the search), else
-    the flat legacy ``{path}/centroids``."""
+    """The centroid table paired with ONE concrete cells generation,
+    ``{cells_dir}/_centroids``. Raises ``IOError`` when that copy is
+    not COMPLETE (no ``_SUCCESS`` of its own): a torn paired write has
+    no other quantizer to fall back to, and any other centroid table
+    could belong to another partitioning."""
     jvm = spark._jvm
     paired = f"{cells_dir}/{_CENTROIDS_SUBDIR}"
     p = jvm.org.apache.hadoop.fs.Path(f"{paired}/_SUCCESS")
-    if p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
-        return paired
-    return f"{path}/centroids"
+    if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        raise IOError(
+            f"index {path}: generation {cells_dir} has no complete "
+            f"{_CENTROIDS_SUBDIR} copy (no {paired}/_SUCCESS); rebuild "
+            f"the index"
+        )
+    return paired
 
 
 _CENTROIDS_SCHEMA = "cell int, ctr array<double>"
@@ -1206,31 +1177,24 @@ def ivf_append_index(
         )
     owner = lease_owner or spark.sparkContext.applicationId
     assert_unleased(spark, path, owner)
-    # WRITER-path resolution (operators/versioned.py): a pre-versioned
-    # crash's set-aside stats/cells copy is healed back into place
-    # BEFORE any write — appending into a fresh empty dir while the
-    # real table sits in debris would fork the table (and, for stats,
-    # silently reset the drift baseline + lose the at-most-once ledger
-    # markers: the r7-ADVICE append-after-swap-crash bug). Cells are
-    # resolved FIRST so the centroids this batch assigns against are
-    # the ones PAIRED with the generation it appends into
+    # Cells are resolved FIRST so the centroids this batch assigns
+    # against are the ones PAIRED with the generation it appends into
     # (:func:`_centroids_dir`).
     from bigdataproject_spark.operators.versioned import (
         TableMissingError,
-        table_live_dir,
+        table_read_dir,
     )
 
-    cells_live = table_live_dir(spark, path, "cells", owner)
+    cells_live = table_read_dir(spark, path, "cells")
     centroids = _collect_index_centroids(spark, path, cells_live)
     if not centroids:
         raise ValueError(f"ivf_append_index: no centroids at {path}")
     try:
-        stats_live = table_live_dir(spark, path, "stats", owner)
+        stats_live = table_read_dir(spark, path, "stats")
     except TableMissingError:
-        # genuinely pre-stats index (no live copy, no recovery copy
-        # anywhere): reconstruct the build baseline from the cells
-        _reconstruct_build_stats(spark, path, centroids, owner)
-        stats_live = table_live_dir(spark, path, "stats", owner)
+        # genuinely pre-stats index: reconstruct the build baseline
+        _reconstruct_build_stats(spark, path, centroids)
+        stats_live = table_read_dir(spark, path, "stats")
 
     assigned = (
         new_vecs.select(
@@ -1328,29 +1292,28 @@ def ivf_append_index(
 
 
 def _reconstruct_build_stats(
-    spark, path: str, centroids: list[tuple[int, list[float]]], owner: str
+    spark, path: str, centroids: list[tuple[int, list[float]]]
 ) -> None:
     """Reconstruct the stats ledger for a genuinely PRE-STATS index:
     one explicit scan of the current cells table, re-measuring d2
     against the stored centroids (the mean then reflects everything
     indexed so far — fine as a drift baseline, and recorded once).
 
-    Callers must have already ruled out a RECOVERABLE ledger (a
-    versioned generation, the legacy dir, or a crashed fold's set-aside
-    copy — ``table_live_dir`` raising :class:`TableMissingError` is the
-    gate). The pre-r8 version keyed on ``exists({path}/stats)`` alone,
-    so an append landing inside a crashed ledger-fold's swap window
-    silently REBUILT the ledger from cells — absorbing every appended
-    row into the build baseline, zeroing the append history, and
-    dropping the at-most-once ledger markers (r7-end driver ADVICE,
-    reproduced in tests/test_ivf_ledger.py)."""
+    Callers must have already ruled out a RECOVERABLE ledger:
+    ``table_read_dir`` raising :class:`TableMissingError` is the gate
+    (debris raises a plain ``IOError`` there instead). Keyed on
+    ``exists({path}/stats)`` alone, an append landing beside a crashed
+    ledger-fold's debris would REBUILD the ledger from cells —
+    absorbing every appended row into the build baseline, zeroing the
+    append history, and dropping the at-most-once ledger markers
+    (reproduced in tests/test_ivf_ledger.py)."""
     from bigdataproject_spark.operators.versioned import (
         publish_version,
-        table_live_dir,
         table_overwrite_target,
+        table_read_dir,
     )
 
-    cells_live = table_live_dir(spark, path, "cells", owner)
+    cells_live = table_read_dir(spark, path, "cells")
     row = (
         spark.read.parquet(cells_live)
         .select(F.col("cv").cast("array<double>").alias("_vd"))
@@ -1564,8 +1527,7 @@ def ivf_compact_index(
     a crash before the flip leaves an orphan next-generation dir the
     next run overwrites-or-skips; a crash inside the (fallback,
     non-atomic) flip is covered by read resolution's newest-complete
-    rule. Pre-versioned (r7 rename-aside) crash debris is healed on
-    entry under the held lease. Returns {files_before, files_after,
+    rule. Returns {files_before, files_after,
     rows, dup_rows_dropped, stats_files_before, stats_files_after}."""
     from bigdataproject_spark.operators.lease import acquire_lease, release_lease
 
@@ -1573,36 +1535,29 @@ def ivf_compact_index(
     acquire_lease(spark, path, owner)
     try:
         return _compact_index_leased(
-            spark, path, files_per_cell, keep_marker_ids, owner
+            spark, path, files_per_cell, keep_marker_ids
         )
     finally:
         release_lease(spark, path, owner)
 
 
 def _compact_index_leased(
-    spark, path: str, files_per_cell: int | None, keep_marker_ids, owner: str
+    spark, path: str, files_per_cell: int | None, keep_marker_ids
 ) -> dict:
     """:func:`ivf_compact_index` body, lease already held."""
     from pyspark.sql import Observation
 
     from bigdataproject_spark.operators.versioned import (
         publish_version,
-        table_live_dir,
         table_overwrite_target,
+        table_read_dir,
     )
 
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    # resolve both tables first: a failure leaves the index untouched
+    cells_prev = table_read_dir(spark, path, "cells")
+    stats_prev = table_read_dir(spark, path, "stats")
 
     # ---- cells generation rewrite ----
-    # table_live_dir heals pre-versioned (r7 rename-aside) crash debris
-    # under the held lease; any remaining __compacting/__old leftovers
-    # are stale (incomplete write, or already-recovered twin) — clear.
-    cells_prev = table_live_dir(spark, path, "cells", owner)
-    fs.delete(Path(f"{path}/cells__compacting"), True)
-    fs.delete(Path(f"{path}/cells__old"), True)
-
     df = spark.read.parquet(cells_prev)
     if files_per_cell is None:
         from bigdataproject_spark.operators.dedup import _plan_size_bytes
@@ -1647,9 +1602,6 @@ def _compact_index_leased(
     publish_version(spark, path, "cells", ver, cells_prev)
 
     # ---- stats-ledger fold (module docstring + ivf_index_drift) ----
-    stats_prev = table_live_dir(spark, path, "stats", owner)
-    fs.delete(Path(f"{path}/stats__compacting"), True)
-    fs.delete(Path(f"{path}/stats__old"), True)
     sdf = spark.read.schema(_INDEX_STATS_SCHEMA).parquet(stats_prev)
     sums = (
         sdf.groupBy("kind")
@@ -1744,7 +1696,10 @@ def ivf_topk_indexed(
     resolve by the same (cosine desc, neighbor asc) window either way;
     raw cosines can differ from the native fold in the last ulp (the
     embedding_neardup round-6 caveat), equality-tested at the default
-    scale.
+    scale. Vector lengths: blas needs every good query vector probing
+    a cell, and every corpus vector it meets there, to share one length
+    and raises ``ValueError`` naming both lengths otherwise; native
+    scores an unequal-length pair as a NULL cosine, ranked last.
 
     The DEFAULT is ``impl='auto'`` — blas when numpy/pandas/pyarrow
     import, native otherwise (:func:`_resolve_impl`): the steady-state
@@ -1933,12 +1888,19 @@ def _ivf_blas_topk(
     # the static partition filter, so the scan reads only their files
     corpus = corpus.filter(F.col("cell").isin(sorted(acc)))
     for cell, lst in acc.items():
-        good, bad_ids = [], []
+        good, bad_ids, dims = [], [], set()
         for qid, qv, qn_ in lst:
             if qv is not None and qn_ is not None and qn_ > 0:
                 good.append((qid, qv, qn_))
+                dims.add(len(qv))
             else:
                 bad_ids.append(qid)
+        if len(dims) > 1:
+            raise ValueError(
+                f"ivf_topk_indexed(impl='blas'): query vectors of lengths "
+                f"{min(dims)} and {max(dims)} probe cell {cell}; use "
+                f"impl='native' for unequal-length vectors"
+            )
         bad_q = np.array(bad_ids)
         by_cell[cell] = (
             np.array([x[0] for x in good]),
@@ -2009,6 +1971,12 @@ def _ivf_blas_topk(
                 if len(qids) == 0:
                     continue
                 cm = np.stack(grp["cv"].to_numpy()).astype(np.float64)
+                if cm.shape[1] != qm.shape[1]:
+                    raise ValueError(
+                        f"ivf_topk_indexed(impl='blas'): query vectors of length "
+                        f"{qm.shape[1]} meet corpus vectors of length {cm.shape[1]} "
+                        f"in cell {cell}; use impl='native' for unequal-length vectors"
+                    )
                 cn = grp["cn"].to_numpy().astype(np.float64)
                 cos = (qm @ cm.T) / np.outer(qn, cn)
                 cos = np.where(np.isfinite(cos), cos, -np.inf)

@@ -2,24 +2,24 @@
 indexes (the IVF index in operators/simsearch.py, the minhash dedup
 index in operators/dedup_index.py).
 
-THE PROBLEM (r7 layout): compaction rewrote a table via rename-aside —
-rename(live -> old), rename(tmp -> live) — which leaves the live
-directory NONEXISTENT between the two renames. Safe for the index's own
-single-writer maintenance loop, but an EXTERNAL reader (the search
-service an ANN index exists to serve; a dedup batch checker) querying
-during the swap fails with path-not-found. At 100 TB, "quiesce all
-readers during every compaction" is not an operating model.
+THE PROBLEM: a rewrite must never leave the live directory missing —
+an EXTERNAL reader (the search service an ANN index exists to serve; a
+dedup batch checker) querying during the rewrite would fail with
+path-not-found, and at 100 TB "quiesce all readers during every
+compaction" is not an operating model.
 
-THE LAYOUT (r8): a table named ``t`` under index root ``path`` lives in
+THE LAYOUT: a table named ``t`` under index root ``path`` lives in
 exactly one of
 
-* ``{path}/t``           — the LEGACY (generation-0) directory. Fresh
-                           builds write here, so a never-compacted
-                           index keeps the r7 layout bit-for-bit.
+* ``{path}/t``           — generation 0. Fresh builds write here; a
+                           never-compacted index has only this dir.
 * ``{path}/t-v{N}``      — versioned generation ``N`` (complete iff it
                            contains Spark's ``_SUCCESS`` marker).
 * ``{path}/t.version``   — the pointer file; its content is the ASCII
                            integer of the CURRENT generation.
+
+plus the index-wide ``pair.version`` (:func:`pair_versions`) and
+``_writer.lock`` (operators/lease.py); nothing else.
 
 Compaction writes the full rewrite to generation ``N+1`` (the live data
 is never touched), then atomically replaces the pointer, then GARBAGE
@@ -50,26 +50,19 @@ attempted). On eventually-consistent object stores the rename fallback
 inherits the store's visibility caveats — same honesty as
 operators/lease.py; front maintenance with a real coordinator there.
 
-READERS NEVER WRITE: resolution for reads (:func:`table_read_dir`)
-performs no renames, ever. Debris from a PRE-versioned (r7) crash —
-live dir missing, a complete ``t__compacting`` or set-aside ``t__old``
-copy present — is resolved by reading the recovery copy IN PLACE. Only
-writer paths (:func:`table_live_dir`, callers hold or could hold the
-maintenance lease) heal that debris by renaming it back into the live
-location, and only when no FOREIGN writer holds the lease — the r7
-reader-heal race (a drift poll renaming inside a live compaction's
-swap window) is gone by construction.
+READERS NEVER WRITE: resolution (:func:`table_read_dir`) performs no
+renames, ever — readers and writers resolve a table the same way. A
+table found nowhere above while rename-aside debris of it sits next to
+it is rejected with a plain ``IOError`` naming that dir: no writer of
+this layout produces such dirs, so they are restored by hand (or the
+index rebuilt), never guessed at.
 """
 
 from __future__ import annotations
 
 import re
 
-from bigdataproject_spark.operators.lease import (
-    LeaseHeldError,
-    lease_owner,
-    read_tiny_file,
-)
+from bigdataproject_spark.operators.lease import read_tiny_file
 
 __all__ = [
     "TableMissingError",
@@ -81,7 +74,6 @@ __all__ = [
     "publish_cadence",
     "publish_pair",
     "publish_version",
-    "table_live_dir",
     "table_overwrite_target",
     "table_read_dir",
     "versioned_dir",
@@ -90,8 +82,7 @@ __all__ = [
 
 class TableMissingError(IOError):
     """The table exists nowhere under the index root — no pointer
-    generation, no complete versioned dir, no legacy dir, no recovery
-    copy."""
+    generation, no complete versioned dir, no legacy dir."""
 
 
 def versioned_dir(path: str, table: str, version: int) -> str:
@@ -395,15 +386,17 @@ def complete_versions(spark, path: str, table: str) -> list[int]:
 
 
 def table_read_dir(spark, path: str, table: str) -> str:
-    """Resolve the directory to READ for logical ``table`` — pointer
-    generation, else newest complete generation (the mid-flip fallback),
-    else the legacy dir, else a pre-versioned crash's recovery copy
-    read IN PLACE (``{table}__compacting`` marked complete, then
-    ``{table}__old``). NEVER mutates the filesystem. Raises
-    :class:`TableMissingError` when nothing exists. A PAIR pointer
-    (:func:`pair_versions`) naming the table outranks the per-table
-    pointer: it is the cross-table-consistent announcement, and during
-    a paired publish the per-table pointers lag it."""
+    """Resolve the directory to read or append for logical ``table`` —
+    pointer generation, else newest complete generation (the mid-flip
+    fallback), else the legacy dir. NEVER mutates the filesystem.
+    Raises :class:`TableMissingError` when nothing exists, and a plain
+    ``IOError`` when the table is missing but rename-aside debris of it
+    is present (not ``TableMissingError``: callers treat that as "build
+    the table fresh", which over debris would silently discard rows).
+    A PAIR pointer (:func:`pair_versions`) naming the table outranks
+    the per-table pointer: it is the cross-table-consistent
+    announcement, and during a paired publish the per-table pointers
+    lag it."""
     fs, _, jvm = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     pv = pair_versions(spark, path)
@@ -422,63 +415,17 @@ def table_read_dir(spark, path: str, table: str) -> str:
     legacy = f"{path}/{table}"
     if fs.exists(Path(legacy)):
         return legacy
-    if fs.exists(Path(f"{legacy}__compacting/_SUCCESS")):
-        return f"{legacy}__compacting"
-    if fs.exists(Path(f"{legacy}__old")):
-        return f"{legacy}__old"
-    raise TableMissingError(f"{legacy} missing and no recovery copy")
-
-
-def table_live_dir(spark, path: str, table: str, owner: str) -> str:
-    """Resolve the directory a WRITER appends into — same order as
-    :func:`table_read_dir`, but pre-versioned crash debris is HEALED by
-    renaming the recovery copy back to the legacy live location (an
-    append into a debris dir would split-brain the table the moment the
-    next compaction's entry heal picked the other copy). Healing
-    renames require that no FOREIGN writer holds the maintenance lease:
-    the caller's own (possibly stale) lease or an unleased index heals;
-    another owner's live compaction raises
-    :class:`~bigdataproject_spark.operators.lease.LeaseHeldError`
-    instead of racing its swap. The pair pointer outranks the
-    per-table one, exactly as in :func:`table_read_dir` — an append
-    must land in the generation readers resolve."""
-    fs, _, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    pv = pair_versions(spark, path)
-    if pv is not None and table in pv:
-        d = versioned_dir(path, table, pv[table])
-        if fs.exists(Path(d)):
-            return d
-    ptr = pointer_version(spark, path, table)
-    if ptr is not None:
-        d = versioned_dir(path, table, ptr)
-        if fs.exists(Path(d)):
-            return d
-    vs = complete_versions(spark, path, table)
-    if vs:
-        return versioned_dir(path, table, vs[-1])
-    legacy = f"{path}/{table}"
-    if fs.exists(Path(legacy)):
-        return legacy
-    tmp, old = f"{legacy}__compacting", f"{legacy}__old"
-    if fs.exists(Path(f"{tmp}/_SUCCESS")):
-        src = tmp
-    elif fs.exists(Path(old)):
-        src = old
-    else:
-        raise TableMissingError(f"{legacy} missing and no recovery copy")
-    held_by = lease_owner(spark, path)
-    if held_by is not None and held_by != owner:
-        raise LeaseHeldError(
-            f"index {path}: {table} needs crash healing but the lease is "
-            f"held by {held_by!r} (this writer: {owner!r}) — its "
-            f"compaction owns the debris; retry after it releases"
-        )
-    if not fs.rename(Path(src), Path(legacy)):
+    debris = [
+        d for d in (f"{legacy}__compacting", f"{legacy}__old")
+        if fs.exists(Path(d))
+    ]
+    if debris:
         raise IOError(
-            f"table_live_dir: recovery rename {src} -> {legacy} failed"
+            f"{legacy} missing; found {', '.join(debris)}, which no writer "
+            f"of this layout produces — restore the table by hand or "
+            f"rebuild the index"
         )
-    return legacy
+    raise TableMissingError(f"{legacy} missing")
 
 
 def table_overwrite_target(
@@ -487,10 +434,9 @@ def table_overwrite_target(
     """Where a FULL REWRITE of the table should write, as
     ``(directory, version_to_publish)``.
 
-    * Never-versioned table (fresh index, or a legacy index that has
-      not been compacted): ``({path}/{table}, None)`` — the write goes
-      to the legacy location in place and no publish is needed, so
-      uncompacted indexes keep the flat r7 layout. With
+    * Never-versioned table (fresh index, or one that has not been
+      compacted): ``({path}/{table}, None)`` — the write goes to the
+      generation-0 dir in place and no publish is needed. With
       ``force_version=True`` (compaction — it must never rewrite the
       directory it is reading) the first versioned generation is
       returned instead.

@@ -161,8 +161,8 @@ def make_index_batch_writer(
     foreachBatch after phase 2 — exactly the between-batches window
     ``compact_index`` requires (no concurrent reader; the next batch
     starts only after this one returns), and a crash anywhere around
-    it is already covered by compaction's rename-aside heal + the
-    two-phase batch replay."""
+    it is already covered by compaction's never-touched live generation
+    + the two-phase batch replay."""
     from bigdataproject_spark.operators.dedup_index import compact_index
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -277,7 +277,6 @@ def make_index_batch_writer(
                     num_hashes=num_hashes,
                     bands=bands,
                     hash_family=hash_family,
-                    owner=owner,
                 )
         finally:
             # r7: the per-batch id-set checkpoint is fully consumed by

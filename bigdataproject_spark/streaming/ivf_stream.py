@@ -45,9 +45,9 @@ after every N-th batch (batch ids are monotonic and checkpoint-stable:
 no writer-side state, survives restarts); ``compact_min_cell_files=M``
 compacts whenever the cells table holds ≥ M part files (one recursive
 listing per batch). The compaction runs INSIDE foreachBatch after the
-append — exactly the between-batches window the rename-aside swap
-requires for WRITERS — and a crash anywhere around it is covered by
-the swap's heal + the guarded replay. The compaction also folds the
+append — exactly the between-batches window compaction requires for
+WRITERS — and a crash anywhere around it is covered by the
+never-touched live generation + the guarded replay. The compaction also folds the
 stats ledger (per-batch tiny files → one file) and prunes the
 at-most-once markers of every batch that can no longer replay (all
 committed ids — everything below the current batch), so the folded

@@ -214,9 +214,43 @@ def test_compaction_preserves_pairs(spark, tmp_path):
     assert stats2["bands"]["rows"] == stats["bands"]["rows"]
 
 
+def _assert_bands_debris_refused(spark, idx, probe, debris):
+    """Read, append and compaction each refuse ``bands`` debris with an
+    IOError naming it (not TableMissingError) and leave every file in
+    place."""
+    import os
+
+    from bigdataproject_spark.operators.versioned import TableMissingError
+
+    def _files():
+        return sorted(
+            os.path.join(r, n) for r, _, fs in os.walk(idx) for n in fs
+        )
+
+    before = _files()
+    for op in (
+        lambda: incremental_minhash_pairs(
+            spark, probe, idx, id_col="doc_id",
+            shingles_col="shingles", threshold=THRESHOLD,
+        ).collect(),
+        lambda: accept_batch(
+            spark, probe, idx, id_col="doc_id",
+            shingles_col="shingles", threshold=THRESHOLD,
+        ),
+        lambda: compact_index(spark, idx),
+    ):
+        with pytest.raises(IOError, match=debris) as ei:
+            op()
+        assert not isinstance(ei.value, TableMissingError)
+        assert _files() == before
+
+
 def test_compaction_recovers_interrupted_swap(spark, tmp_path):
-    """Crash window: live table deleted, rename not reached. A re-run
-    must heal from the completed temp dir before doing anything."""
+    """Rename-aside debris — the live bands table gone beside a complete
+    ``bands__compacting`` copy — is no state any writer of the layout
+    leaves: read, append and compaction refuse it by name. Stale debris
+    beside a RESOLVABLE table is never read: after a compaction the
+    versioned generation serves and compacts regardless."""
     import shutil
 
     old = _docs(spark, OLD_ROWS)
@@ -233,8 +267,12 @@ def test_compaction_recovers_interrupted_swap(spark, tmp_path):
         )
 
     before = _pairs()
-    # simulate the crash: a finished compacted temp dir, live deleted
-    compact_index(spark, idx)  # leaves a compact live store
+    shutil.copytree(f"{idx}/bands", f"{idx}/bands__compacting")
+    shutil.rmtree(f"{idx}/bands")
+    _assert_bands_debris_refused(spark, idx, probe, "bands__compacting")
+
+    shutil.move(f"{idx}/bands__compacting", f"{idx}/bands")  # by hand
+    compact_index(spark, idx)  # bands-v1 now resolves
     shutil.copytree(f"{idx}/bands", f"{idx}/bands__compacting")
     shutil.rmtree(f"{idx}/bands")
     stats = compact_index(spark, idx)
@@ -243,9 +281,10 @@ def test_compaction_recovers_interrupted_swap(spark, tmp_path):
 
 
 def test_compaction_recovers_from_old_copy(spark, tmp_path):
-    """Crash window variant: live renamed aside, temp dir lost or
-    incomplete (no _SUCCESS). Recovery must restore the set-aside
-    original instead of failing."""
+    """Debris variant: the live bands table renamed aside to
+    ``bands__old`` (next to an incomplete ``bands__compacting``). Read,
+    append and compaction refuse it by name; restored by hand, the
+    index finds the same pairs and compacts."""
     import shutil
 
     old = _docs(spark, OLD_ROWS)
@@ -262,16 +301,14 @@ def test_compaction_recovers_from_old_copy(spark, tmp_path):
         )
 
     before = _pairs()
-    # simulate: live renamed aside, temp incomplete (_SUCCESS missing)
     shutil.move(f"{idx}/bands", f"{idx}/bands__old")
     (tmp_path / "idx" / "bands__compacting").mkdir()
+    _assert_bands_debris_refused(spark, idx, probe, "bands__old")
+
+    shutil.move(f"{idx}/bands__old", f"{idx}/bands")  # restored by hand
     stats = compact_index(spark, idx)
     assert _pairs() == before
     assert stats["bands"]["rows"] > 0
-    import os
-
-    assert not os.path.exists(f"{idx}/bands__old")
-    assert not os.path.exists(f"{idx}/bands__compacting")
 
 
 def test_empty_batch(spark, tmp_path):

@@ -536,3 +536,51 @@ def test_measured_query_bytes_memoized(spark, monkeypatch):
     assert simsearch.clear_measured_query_cache(spark) >= 1
     # cleared → recompute works again
     assert simsearch._measured_query_bytes(local, n_probe=4) == first
+
+
+def test_blas_unequal_vector_lengths_raise_native_ranks_null(spark, tmp_path):
+    """The blas matmul needs one vector length per probed cell: a
+    mixed 4-d/8-d query table against an 8-d index raises a ValueError
+    naming both lengths (as does a 4-d-only table meeting the 8-d
+    corpus), while native scores the unequal-length pairs as NULL
+    cosines ranked last."""
+    import pytest
+
+    from bigdataproject_spark.operators.simsearch import (
+        ivf_topk_indexed,
+        ivf_write_index_from_centroids,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, [float((i * j) % 7) + 1.0 for j in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    ctrs = [(0, [1.0] * 8), (1, [5.0] * 8)]
+    idx = str(tmp_path / "idx")
+    ivf_write_index_from_centroids(
+        corpus, idx, ctrs, id_col="vec_id", vec_col="embedding"
+    )
+    mixed = spark.createDataFrame(
+        [(100, [1.0, 2.0, 3.0, 4.0]), (101, [2.0] * 8)],
+        "vec_id long, embedding array<double>",
+    )
+    short = mixed.filter(F.col("vec_id") == 100)
+    kw = dict(id_col="vec_id", vec_col="embedding", k=3, n_probe=2)
+    for q, msg in (
+        (mixed, r"lengths 4 and 8"),
+        (short, r"length 4 meet corpus vectors of length 8"),
+    ):
+        with pytest.raises(Exception, match=msg) as ei:
+            ivf_topk_indexed(spark, idx, q, impl="blas", **kw).collect()
+        assert "impl='native'" in str(ei.value)
+
+    got = sorted(
+        (r.q_id, r.rank, r.neighbor_id, r.cosine)
+        for r in ivf_topk_indexed(spark, idx, mixed, impl="native", **kw).collect()
+    )
+    short_rows = [g for g in got if g[0] == 100]
+    assert [(g[1], g[2], g[3]) for g in short_rows] == [
+        (1, 0, None), (2, 1, None), (3, 2, None)
+    ]
+    assert all(g[3] is not None for g in got if g[0] == 101)
+    assert len(got) == 6

@@ -264,41 +264,3 @@ def test_compact_counts_equal_count_jobs_after_replay(spark, tmp_path):
     assert rep["rows"] == after
     assert rep["dup_rows_dropped"] == before - after
     assert spark.read.parquet(table_read_dir(spark, idx, "cells")).count() == after
-
-
-def test_interrupted_centroid_copy_leaves_no_marker(spark, tmp_path, monkeypatch):
-    """The paired-centroid copy lands its data files unmarked and is
-    marked last: a rebuild that dies inside its backfill copy leaves a
-    torn ``_centroids`` that resolution ignores (flat fallback), and the
-    next rebuild backfills it again."""
-    import os
-    import shutil
-
-    from bigdataproject_spark.operators import simsearch
-
-    idx, _, _ = _index(spark, tmp_path)
-    ctrs = [(c, [float(c), float(c % 5), float(c % 4)]) for c in range(8)]
-    base = spark.read.parquet(str(tmp_path / "in" / "base"))
-    ivf_compact_index(spark, idx)
-    v_old = table_read_dir(spark, idx, "cells")
-    shutil.rmtree(f"{v_old}/_centroids")  # a generation without its pair
-
-    def dies_on_centroids(spark_, dirpath):
-        if dirpath.endswith("/_centroids"):
-            raise RuntimeError("interrupted before the marker")
-        real_touch(spark_, dirpath)
-
-    real_touch = simsearch._touch_success
-    monkeypatch.setattr(simsearch, "_touch_success", dies_on_centroids)
-    with pytest.raises(RuntimeError, match="interrupted"):
-        ivf_write_index_from_centroids(base, idx, ctrs, **KW)
-    monkeypatch.undo()
-    torn = f"{v_old}/_centroids"
-    assert any(f.endswith(".parquet") for f in os.listdir(torn))
-    assert not os.path.exists(f"{torn}/_SUCCESS")
-    assert _centroids_dir(spark, idx, v_old) == f"{idx}/centroids"
-
-    ivf_write_index_from_centroids(base, idx, ctrs, **KW)
-    assert os.path.isfile(f"{torn}/_SUCCESS")
-    got = sorted((r["cell"], list(r["ctr"])) for r in spark.read.parquet(torn).collect())
-    assert got == ctrs

@@ -245,77 +245,64 @@ def test_occupancy_threshold_scales_with_small_k(spark, tmp_path):
     assert rep["rebuild_recommended"] is False
 
 
+def _files(p: str) -> list[str]:
+    import os
+
+    return sorted(os.path.join(r, n) for r, _, fs in os.walk(p) for n in fs)
+
+
 def test_stats_swap_window_read_in_place_and_writer_heals(
     spark, sf_dir, tmp_path
 ):
-    """Pre-versioned (r7 rename-aside) crash debris: stats/ missing with
-    a complete __compacting copy (or only the set-aside original).
-
-    r8 contract: a pure READ — a drift report — resolves the recovery
-    copy IN PLACE and NEVER mutates the filesystem (the r7 heal-on-read
-    renamed from reader paths and could race a live compaction's own
-    swap: that ADVICE finding). A WRITER path (an append, a compaction
-    — both may take the lease) heals the debris by renaming it back
-    before writing."""
-    import os
+    """Rename-aside stats debris (a complete ``stats__compacting`` copy
+    or the ledger set aside as ``stats__old``) is no state any writer of
+    the layout leaves. A drift report (reader), an append and a
+    compaction (writers) each refuse it with an IOError naming the
+    debris, and none of them touches the filesystem; restored by hand,
+    the ledger reports and folds exactly as before."""
+    from bigdataproject_spark.operators.versioned import TableMissingError
 
     seed, d1, _, ctrs = _seed_and_deltas(spark, sf_dir)
-    idx = str(tmp_path / "idx")
-    ivf_write_index_from_centroids(
-        seed, idx, ctrs, id_col="vec_id", vec_col="embedding"
-    )
-    ivf_append_index(
-        d1, idx, id_col="vec_id", vec_col="embedding",
-        guard_ids=True, ledger_id="batch-0",
-    )
-    want = ivf_index_drift(spark, idx)
+    for debris in ("stats__compacting", "stats__old"):
+        idx = str(tmp_path / debris)
+        ivf_write_index_from_centroids(
+            seed, idx, ctrs, id_col="vec_id", vec_col="embedding"
+        )
+        ivf_append_index(
+            d1, idx, id_col="vec_id", vec_col="embedding",
+            guard_ids=True, ledger_id="batch-0",
+        )
+        want = ivf_index_drift(spark, idx)
+        shutil.move(f"{idx}/stats", f"{idx}/{debris}")
+        before = _files(idx)
+        for op in (
+            lambda: ivf_index_drift(spark, idx),
+            lambda: ivf_append_index(
+                spark.createDataFrame([], "vec_id long, embedding array<float>"),
+                idx, id_col="vec_id", vec_col="embedding",
+                guard_ids=True, ledger_id="batch-heal",
+            ),
+            lambda: ivf_compact_index(spark, idx),
+        ):
+            with pytest.raises(IOError, match=debris) as ei:
+                op()
+            assert not isinstance(ei.value, TableMissingError)
+            assert _files(idx) == before
 
-    # 1: complete temp dir, live missing -> READER reads it in place
-    shutil.copytree(f"{idx}/stats", f"{idx}/stats__compacting")
-    shutil.rmtree(f"{idx}/stats")
-    _drift_eq(want, ivf_index_drift(spark, idx))
-    assert not os.path.isdir(f"{idx}/stats")  # reader did NOT heal
-    assert os.path.isdir(f"{idx}/stats__compacting")
-
-    # ... and a WRITER (compaction, lease-held) heals + folds it
-    ivf_compact_index(spark, idx)
-    assert not os.path.isdir(f"{idx}/stats__compacting")
-    _drift_eq(want, ivf_index_drift(spark, idx))
-
-    # 2: live renamed aside, no temp (the other debris shape — on a
-    # fresh LEGACY index: rename-aside debris only ever arises on the
-    # pre-versioned layout): read in place, then an append (writer, no
-    # foreign lease) heals by rename
-    idx2 = str(tmp_path / "idx2")
-    ivf_write_index_from_centroids(
-        seed, idx2, ctrs, id_col="vec_id", vec_col="embedding"
-    )
-    ivf_append_index(
-        d1, idx2, id_col="vec_id", vec_col="embedding",
-        guard_ids=True, ledger_id="batch-0",
-    )
-    want2 = ivf_index_drift(spark, idx2)
-    shutil.move(f"{idx2}/stats", f"{idx2}/stats__old")
-    _drift_eq(want2, ivf_index_drift(spark, idx2))
-    assert os.path.isdir(f"{idx2}/stats__old")  # reader left it alone
-    rep = ivf_append_index(
-        spark.createDataFrame([], "vec_id long, embedding array<float>"),
-        idx2, id_col="vec_id", vec_col="embedding",
-        guard_ids=True, ledger_id="batch-heal",
-    )
-    assert rep["n_appended"] == 0
-    assert not os.path.isdir(f"{idx2}/stats__old")  # writer healed
-    assert os.path.isdir(f"{idx2}/stats")
-    _drift_eq(want2, ivf_index_drift(spark, idx2))
+        shutil.move(f"{idx}/{debris}", f"{idx}/stats")  # restored by hand
+        _drift_eq(want, ivf_index_drift(spark, idx))
+        ivf_compact_index(spark, idx)
+        _drift_eq(want, ivf_index_drift(spark, idx))
 
 
 def test_reader_never_mutates_under_foreign_lease(spark, sf_dir, tmp_path):
-    """The r7 ADVICE race, pinned shut: a drift poll that lands inside
-    ANOTHER writer's compaction (foreign lease held, stats debris on
-    disk) must read the recovery copy in place and leave every path
-    untouched — renaming here could beat the compactor to its own swap
-    and break its rollback."""
+    """A drift poll that meets stats debris while ANOTHER writer holds
+    the lease fails with the debris IOError and leaves every path
+    untouched; a writer under the same foreign lease is refused by the
+    lease before it resolves anything."""
     import os
+
+    from bigdataproject_spark.operators.lease import LeaseHeldError
 
     seed, d1, _, ctrs = _seed_and_deltas(spark, sf_dir)
     idx = str(tmp_path / "idx")
@@ -326,46 +313,38 @@ def test_reader_never_mutates_under_foreign_lease(spark, sf_dir, tmp_path):
         d1, idx, id_col="vec_id", vec_col="embedding",
         guard_ids=True, ledger_id="batch-0",
     )
-    want = ivf_index_drift(spark, idx)
-    shutil.copytree(f"{idx}/stats", f"{idx}/stats__compacting")
-    shutil.rmtree(f"{idx}/stats")
+    shutil.move(f"{idx}/stats", f"{idx}/stats__compacting")
     with open(f"{idx}/_writer.lock", "w") as fh:
         fh.write("somebody-else")  # a foreign compaction is live
 
-    before = sorted(
-        os.path.join(r, n)
-        for r, _, files in os.walk(idx)
-        for n in files
-    )
-    _drift_eq(want, ivf_index_drift(spark, idx))  # read succeeds...
-    after = sorted(
-        os.path.join(r, n)
-        for r, _, files in os.walk(idx)
-        for n in files
-    )
-    assert before == after  # ...and the filesystem is untouched
-
-    # a WRITER hitting the same debris under the foreign lease refuses
-    from bigdataproject_spark.operators.lease import LeaseHeldError
-
-    with pytest.raises((LeaseHeldError, RuntimeError)):
+    before = _files(idx)
+    with pytest.raises(IOError, match="stats__compacting"):
+        ivf_index_drift(spark, idx)
+    assert _files(idx) == before  # the filesystem is untouched
+    with pytest.raises(LeaseHeldError):
         ivf_append_index(
             d1, idx, id_col="vec_id", vec_col="embedding",
             guard_ids=True, ledger_id="batch-1",
         )
+    assert _files(idx) == before
     os.remove(f"{idx}/_writer.lock")
 
 
 def test_append_after_fold_crash_heals_instead_of_rebuilding(
     spark, sf_dir, tmp_path
 ):
-    """The r7-end driver ADVICE (medium): an append landing inside a
-    crashed ledger-fold's swap window found exists({idx}/stats) false
-    and silently REBUILT the ledger from the cells table — the build
-    baseline absorbed every appended row, the append history zeroed,
-    and the at-most-once markers vanished (reproduced: build 167->334,
-    n_appended_total 333->166). The append must instead HEAL the
-    set-aside ledger and carry on."""
+    """An append meeting a crashed ledger fold's debris (stats gone, a
+    copy aside) must NOT rebuild the ledger from the cells table: that
+    absorbs every appended row into the build baseline, zeroes the
+    append history and drops the at-most-once markers (reproduced
+    earlier: build 167->334, n_appended_total 333->166). The debris is
+    refused with a plain IOError — not TableMissingError, the one
+    exception that triggers the rebuild — and, restored by hand, the
+    ledger still holds its baseline, history and batch-0 marker."""
+    import os
+
+    from bigdataproject_spark.operators.versioned import TableMissingError
+
     seed, d1, d2, ctrs = _seed_and_deltas(spark, sf_dir)
     idx = str(tmp_path / "idx")
     ivf_write_index_from_centroids(
@@ -378,28 +357,26 @@ def test_append_after_fold_crash_heals_instead_of_rebuilding(
     want_build = ivf_index_drift(spark, idx)["n_indexed_at_build"]
     assert want_build == seed.count()
 
-    # crash inside the fold's swap window: live missing, complete copy
-    # aside (both debris shapes)
     for debris in ("stats__compacting", "stats__old"):
-        shutil.copytree(f"{idx}/stats", f"{idx}/{debris}")
-        shutil.rmtree(f"{idx}/stats")
-        rep = ivf_append_index(
-            d2, idx, id_col="vec_id", vec_col="embedding",
-            guard_ids=True, ledger_id="batch-1",
-        )
-        # the ledger was healed, not reconstructed from cells:
+        shutil.move(f"{idx}/stats", f"{idx}/{debris}")
+        with pytest.raises(IOError, match=debris) as ei:
+            ivf_append_index(
+                d2, idx, id_col="vec_id", vec_col="embedding",
+                guard_ids=True, ledger_id="batch-1",
+            )
+        assert not isinstance(ei.value, TableMissingError)
+        assert not os.path.exists(f"{idx}/stats")  # no rebuilt ledger
+        shutil.move(f"{idx}/{debris}", f"{idx}/stats")  # restored by hand
+        rep = ivf_index_drift(spark, idx)
         assert rep["n_indexed_at_build"] == want_build
-        assert rep["n_appended_total"] == d1.count() + d2.count()
-        # the healed ledger still carries batch-0's at-most-once marker
+        assert rep["n_appended_total"] == d1.count()
+        # the ledger still carries batch-0's at-most-once marker
         replay = ivf_append_index(
             d1, idx, id_col="vec_id", vec_col="embedding",
             guard_ids=True, ledger_id="batch-0",
         )
         assert replay["n_appended"] == 0
-        assert replay["n_appended_total"] == d1.count() + d2.count()
-        # reset for the second debris shape: drop batch-1's rows is not
-        # needed — d2 is already indexed, the second pass appends 0 and
-        # the assertions above stay exact.
+        assert replay["n_appended_total"] == d1.count()
 
 
 def test_occupancy_scan_reads_zero_data_columns(spark, sf_dir, tmp_path):

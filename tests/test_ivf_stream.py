@@ -164,7 +164,11 @@ def test_in_stream_compaction_policy(spark, sf_dir, tmp_path):
     n_files = len(
         glob.glob(f"{table_read_dir(spark, idx, 'cells')}/cell=*/*.parquet")
     )
-    n_cells = spark.read.parquet(f"{idx}/centroids").count()
+    from bigdataproject_spark.operators.simsearch import _collect_index_centroids
+
+    n_cells = len(
+        _collect_index_centroids(spark, idx, table_read_dir(spark, idx, "cells"))
+    )
     assert n_files <= n_cells  # files_per_cell resolves to 1 at this size
 
     full = str(tmp_path / "full")
@@ -215,47 +219,44 @@ def test_compact_is_rerunnable(spark, sf_dir, tmp_path):
 
 
 def test_compact_heals_interrupted_swap(spark, sf_dir, tmp_path):
-    """PRE-versioned (r7 rename-aside) crash debris on a legacy-layout
-    index: cells deleted with a complete __compacting copy, or renamed
-    aside with an incomplete temp. A compaction (writer, lease-held)
-    must heal the debris and proceed; searches keep working against
-    the debris IN PLACE even before the heal (reader resolution)."""
-    import os
+    """Rename-aside debris on a never-compacted index — cells gone with
+    a complete ``cells__compacting`` copy, or cells renamed aside to
+    ``cells__old`` — is no state any writer of the layout leaves. Search
+    and compaction refuse it with an IOError naming the debris and leave
+    the disk as they found it; restored by hand, the index serves and
+    compacts exactly as before."""
+    from bigdataproject_spark.operators.versioned import TableMissingError
 
     seed, d1, _, queries, ctrs = _seed_and_deltas(spark, sf_dir)
 
-    def _legacy_index(name):
-        p = str(tmp_path / name)
+    def _files(p):
+        return sorted(os.path.join(r, n) for r, _, fs in os.walk(p) for n in fs)
+
+    for debris in ("cells__compacting", "cells__old"):
+        idx = str(tmp_path / debris)
         ivf_write_index_from_centroids(
-            seed, p, ctrs, id_col="vec_id", vec_col="embedding"
+            seed, idx, ctrs, id_col="vec_id", vec_col="embedding"
         )
         ivf_append_index(
-            d1, p, id_col="vec_id", vec_col="embedding", guard_ids=True
+            d1, idx, id_col="vec_id", vec_col="embedding", guard_ids=True
         )
-        return p
+        want = _search(spark, idx, queries)
+        shutil.move(f"{idx}/cells", f"{idx}/{debris}")
+        before = _files(idx)
+        for op in (
+            lambda: _search(spark, idx, queries),
+            lambda: ivf_compact_index(spark, idx),
+        ):
+            with pytest.raises(IOError, match=debris) as ei:
+                op()
+            assert not isinstance(ei.value, TableMissingError)
+        assert _files(idx) == before
 
-    # 1: finished temp dir, live deleted (crash between the renames)
-    idx = _legacy_index("idx")
-    want = _search(spark, idx, queries)
-    shutil.copytree(f"{idx}/cells", f"{idx}/cells__compacting")
-    shutil.rmtree(f"{idx}/cells")
-    assert _search(spark, idx, queries) == want  # reader: in place
-    assert not os.path.exists(f"{idx}/cells")  # ...and never mutates
-    stats = ivf_compact_index(spark, idx)
-    assert stats["rows"] == seed.count() + d1.count()
-    assert not os.path.exists(f"{idx}/cells__compacting")
-    assert _search(spark, idx, queries) == want
-
-    # 2: live renamed aside, temp incomplete (no _SUCCESS)
-    idx2 = _legacy_index("idx2")
-    shutil.move(f"{idx2}/cells", f"{idx2}/cells__old")
-    os.mkdir(f"{idx2}/cells__compacting")
-    assert _search(spark, idx2, queries) == want  # reader: __old in place
-    stats = ivf_compact_index(spark, idx2)
-    assert stats["rows"] == seed.count() + d1.count()
-    assert _search(spark, idx2, queries) == want
-    assert not os.path.exists(f"{idx2}/cells__old")
-    assert not os.path.exists(f"{idx2}/cells__compacting")
+        shutil.move(f"{idx}/{debris}", f"{idx}/cells")  # restored by hand
+        assert _search(spark, idx, queries) == want
+        stats = ivf_compact_index(spark, idx)
+        assert stats["rows"] == seed.count() + d1.count()
+        assert _search(spark, idx, queries) == want
 
 
 def test_stream_stats_ledger_stays_bounded(spark, sf_dir, tmp_path):

@@ -298,10 +298,12 @@ def test_compaction_between_stream_batches(spark, tmp_path):
 
 
 def test_crash_mid_compaction_heals_then_stream_replays(spark, tmp_path):
-    """Crash in compaction's rename window (live renamed aside, the
-    completed compacted dir not yet renamed in) followed by a stream
-    replay: re-running compact_index must heal, and the replayed
-    micro-batch must leave index and output unchanged."""
+    """Rename-aside debris (live bands renamed aside, a completed
+    compacted copy beside it — a swap no writer of the layout performs)
+    followed by a stream replay: compaction and the replayed micro-batch
+    both refuse the debris by name and change nothing; restored by hand,
+    compaction runs and the replay leaves index and output unchanged."""
+    import os
     import shutil
 
     from bigdataproject_spark.operators.dedup_index import compact_index
@@ -316,9 +318,6 @@ def test_crash_mid_compaction_heals_then_stream_replays(spark, tmp_path):
     stored_before = _stored_ids(spark, idx)
     n_bands = _read_idx(spark, idx, "bands").count()
 
-    # simulate the mid-swap crash exactly as compact_index sequences it:
-    # a COMPLETED compacted temp dir exists (Spark write → _SUCCESS),
-    # live has been renamed aside, tmp→live never ran.
     live, tmp_d, old = (
         f"{idx}/bands", f"{idx}/bands__compacting", f"{idx}/bands__old"
     )
@@ -330,11 +329,25 @@ def test_crash_mid_compaction_heals_then_stream_replays(spark, tmp_path):
     )
     shutil.move(live, old)
 
-    stats = compact_index(spark, idx)  # heals from the completed tmp
+    def _files():
+        return sorted(
+            os.path.join(r, n) for r, _, fs in os.walk(idx) for n in fs
+        )
+
+    before = _files()
+    with pytest.raises(IOError, match="bands__compacting, .*bands__old"):
+        compact_index(spark, idx)
+    with pytest.raises(Exception, match="bands__compacting"):
+        writer(_docs(spark, B2), 1)
+    assert _files() == before
+
+    shutil.rmtree(tmp_d)
+    shutil.move(old, live)  # restored by hand
+    stats = compact_index(spark, idx)
     assert stats["bands"]["rows"] == n_bands
     assert _read_idx(spark, idx, "bands").count() == n_bands
 
-    writer(_docs(spark, B2), 1)  # stream replay after the healed swap
+    writer(_docs(spark, B2), 1)  # stream replay after the restore
     assert _out_ids(spark, out) == {1, 2, 12}
     assert _stored_ids(spark, idx) == stored_before
     assert _read_idx(spark, idx, "bands").count() == n_bands

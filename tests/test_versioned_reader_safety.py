@@ -213,13 +213,10 @@ def test_dedup_probe_inside_compaction_swap_never_errors(
 
 
 def test_rebuild_pairs_centroids_with_generation(spark, sf_dir, tmp_path):
-    """The r8 pairing contract: once a generation carries its
-    ``_centroids`` copy, searches, appends, drift, and compaction all
-    resolve the quantizer from the SAME directory as the cells — the
-    flat {path}/centroids table is a legacy/introspection copy only.
-    Proof: delete the flat copy and everything still works."""
-    import shutil
-
+    """The r8 pairing contract: every generation carries its
+    ``_centroids`` copy, and searches, appends, drift, and compaction
+    all resolve the quantizer from the SAME directory as the cells —
+    no centroid table lives anywhere else under the index root."""
     emb = load_table(spark, sf_dir, "embeddings")
     seed = emb.filter(F.col("vec_id") % 3 == 0)
     delta = emb.filter(F.col("vec_id") % 3 == 1)
@@ -245,9 +242,7 @@ def test_rebuild_pairs_centroids_with_generation(spark, sf_dir, tmp_path):
             ).collect()
         ]
 
-    expected = _search()
-    shutil.rmtree(f"{idx}/centroids")  # flat copy gone
-    assert _search() == expected
+    assert not os.path.exists(f"{idx}/centroids")
     rep = ivf_append_index(
         delta, idx, id_col="vec_id", vec_col="embedding", guard_ids=True
     )
@@ -408,9 +403,9 @@ def test_crashed_rebuild_leaves_no_complete_orphan_without_centroids(
     _centroids lands (deferred _SUCCESS), so a crash between the cells
     write and the centroids write leaves an INCOMPLETE dir that
     resolution ignores — never a complete-looking generation that
-    would pair fresh cells with the stale flat quantizer; and a torn
-    paired copy (no _centroids/_SUCCESS) falls back to the flat table
-    instead of erroring the search."""
+    would pair fresh cells with a stale quantizer; and a torn paired
+    copy (no _centroids/_SUCCESS) fails the search loudly, naming the
+    generation, since there is no other quantizer to fall back to."""
     import shutil
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -452,58 +447,11 @@ def test_crashed_rebuild_leaves_no_complete_orphan_without_centroids(
     assert _search() == expected
     shutil.rmtree(v2)
 
-    # torn paired copy: _centroids present but incomplete -> flat
-    # fallback, search unaffected (pointer restored via a compaction)
+    # torn paired copy: _centroids present but incomplete -> the
+    # search raises naming the generation (pointer restored via a
+    # compaction)
     ivf_compact_index(spark, idx)
     cur = table_read_dir(spark, idx, "cells")
     os.remove(f"{cur}/_centroids/_SUCCESS")
-    assert _search() == expected
-
-
-@pytest.mark.slow
-def test_rebuild_backfills_paired_copy_for_pre_pairing_generation(
-    spark, sf_dir, tmp_path
-):
-    """A pre-r8 index's first rebuild: the superseded generation has no
-    paired _centroids, so its grace-window readers resolve the flat
-    table — which the rebuild overwrites with the NEW quantizer. The
-    rebuild must backfill the old flat copy into the superseded
-    generation FIRST, so those readers keep a consistent
-    (quantizer, partitioning) snapshot through the transition."""
-    import shutil
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    seed = emb.filter(F.col("vec_id") % 3 == 0)
-    grown = emb.filter(F.col("vec_id") % 3 != 2)
-    ctrs_old = sample_centroids(
-        seed, id_col="vec_id", vec_col="embedding", n_centroids=4
-    )
-    ctrs_new = sample_centroids(
-        grown, id_col="vec_id", vec_col="embedding", n_centroids=8
-    )
-    idx = str(tmp_path / "idx")
-    ivf_write_index_from_centroids(
-        seed, idx, ctrs_old, id_col="vec_id", vec_col="embedding"
-    )
-    ivf_compact_index(spark, idx)
-    v_old = table_read_dir(spark, idx, "cells")
-    shutil.rmtree(f"{v_old}/_centroids")  # simulate a pre-r8 generation
-
-    ivf_write_index_from_centroids(
-        grown, idx, ctrs_new, id_col="vec_id", vec_col="embedding"
-    )
-    # the superseded generation now carries the OLD quantizer, paired
-    assert os.path.isfile(f"{v_old}/_centroids/_SUCCESS")
-    old_pairs = sorted(
-        (r["cell"], tuple(round(x, 6) for x in r["ctr"]))
-        for r in spark.read.parquet(f"{v_old}/_centroids").collect()
-    )
-    want = sorted(
-        (c, tuple(round(float(x), 6) for x in v)) for c, v in ctrs_old
-    )
-    assert old_pairs == want
-    # ... while the live generation pairs the NEW one
-    v_new = table_read_dir(spark, idx, "cells")
-    assert v_new != v_old
-    n_new = spark.read.parquet(f"{v_new}/_centroids").count()
-    assert n_new == len(ctrs_new)
+    with pytest.raises(IOError, match=f"generation {cur} has no complete"):
+        _search()
