@@ -54,18 +54,46 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
-def _resolve_conf(extra_conf: dict | None = None) -> dict[str, str]:
+# The checkout root, where the top-level worker module lives.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Python worker module of local sessions (see pyspark_graft_worker.py):
+# pyspark.worker plus a stat guard that stops every task from
+# re-reading pyspark.zip's directory.
+WORKER_MODULE = "pyspark_graft_worker"
+
+
+def python_worker_conf(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """The Python-worker settings a session on ``master`` adds to
+    ``conf``. For a ``local`` master: the worker module, unless ``conf``
+    names one, and the checkout root appended to
+    ``spark.executorEnv.PYTHONPATH`` after any caller value, so the
+    workers import the worker module and the package's own UDF helpers
+    whatever the driver's working directory. Any other master runs
+    workers on hosts whose layout this process cannot know: nothing."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    return {
+        "spark.python.worker.module": conf.get("spark.python.worker.module", WORKER_MODULE),
+        key: os.pathsep.join(paths if REPO_ROOT in paths else [*paths, REPO_ROOT]),
+    }
+
+
+def _resolve_conf(extra_conf: dict | None = None, master: str = "local[*]") -> dict[str, str]:
     """Session conf = static defaults + env-sized knobs resolved at
     CALL time + caller overrides. Per-call env resolution is the
     contract apply_scale_env (tools/sweeplib.py) depends on — it sets
     SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_DRIVER_MEM after this module is
     imported. driver.memory still only takes effect for the FIRST
-    session in a JVM (Spark cannot resize a live driver)."""
+    session in a JVM (Spark cannot resize a live driver). Last come the
+    Python-worker settings of ``master`` (:func:`python_worker_conf`)."""
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
     conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     if extra_conf:
         conf.update(extra_conf)
+    conf.update(python_worker_conf(master, conf))
     return conf
 
 
@@ -83,7 +111,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = _resolve_conf(extra_conf)
+    conf = _resolve_conf(extra_conf, master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -20,7 +20,7 @@ import sweep  # noqa: E402
 import sweeplib  # noqa: E402
 
 ROW_KEYS = {
-    "sec", "cpu_s", "shuffle_write_mb", "shuffle_read_mb",
+    "sec", "cpu_s", "py_cpu_s", "shuffle_write_mb", "shuffle_read_mb",
     "jobs", "stages", "tasks",
 }
 
@@ -82,14 +82,41 @@ def test_window_metrics_are_per_pass():
     t0 = dict.fromkeys(
         ("cpu_ns", "shuffle_write", "shuffle_read", "stages", "tasks", "jobs"), 0
     )
+    t0["py_cpu_s"] = 10.0
     t1 = {
         "cpu_ns": 3_000_000_000, "shuffle_write": 3_000_000,
         "shuffle_read": 1_500_000, "stages": 6, "tasks": 7, "jobs": 3,
+        "py_cpu_s": 11.5,
     }
     assert sweeplib.window_metrics(t0, t1, passes=3) == {
-        "cpu_s": 1.0, "shuffle_write_mb": 1.0, "shuffle_read_mb": 0.5,
-        "jobs": 1, "stages": 2, "tasks": 2.3,
+        "cpu_s": 1.0, "py_cpu_s": 0.5, "shuffle_write_mb": 1.0,
+        "shuffle_read_mb": 0.5, "jobs": 1, "stages": 2, "tasks": 2.3,
     }
+
+
+def test_measured_window_counts_the_python_workers_cpu(spark):
+    """``executorCpuTime`` misses the Python workers; ``py_cpu_s`` is
+    where a mapInPandas operator's own CPU shows."""
+
+    def burn(batches):
+        import time
+
+        import pandas as pd
+
+        start = time.process_time()
+        while time.process_time() - start < 0.4:
+            pass
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"n": [1]})
+
+    df = spark.range(0, 2, 1, 2)
+    sweeplib.force(df.mapInPandas(burn, "n long"))  # start the workers
+    n, row = sweeplib.measured(spark, lambda: df.mapInPandas(burn, "n long").count())
+    assert n == 2
+    assert set(row) == ROW_KEYS
+    assert row["py_cpu_s"] >= 0.7  # two tasks x 0.4 CPU-s, tick-rounded
+    assert row["jobs"] >= 1
 
 
 @pytest.mark.parametrize("n_chunks", [1, 3, 10])

@@ -23,8 +23,9 @@ harness warms every candidate once (JVM/codegen/cache), then runs
 them INTERLEAVED for ``rounds`` rounds (interleaving distributes any
 slow box drift across candidates instead of biasing whoever ran
 last), forcing each with ``.count()`` and reading CPU/shuffle/job
-deltas with ``sweeplib.stage_totals`` (the status REST API). The
-session must be built with the status API on and every stage retained:
+deltas with ``sweeplib.measured`` (the status REST API, plus the
+Python workers' CPU from ``/proc``). The session must be built with
+the status API on and every stage retained:
 ``get_spark(extra_conf=sweeplib.STATUS_CONF)``.
 
 Decide on ``cpu_s`` first, ``shuffle_write_mb`` second, scan count
@@ -34,18 +35,18 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from sweeplib import stage_totals, window_metrics  # noqa: E402
+from sweeplib import measured  # noqa: E402
 
 
 def cpu_ab(
     spark, candidates: dict, *, rounds: int = 2, warm: bool = True,
     force: str = "count",
 ):
-    """Run the interleaved CPU A/B. Returns {label: [{cpu_s, wall_s,
-    shuffle_write_mb, shuffle_read_mb, jobs, stages, tasks, rows}, ...]}
+    """Run the interleaved CPU A/B. Returns {label: [{cpu_s, py_cpu_s,
+    wall_s, shuffle_write_mb, shuffle_read_mb, jobs, stages, tasks,
+    rows}, ...]}
     with one entry per round.
 
     ``candidates`` maps label → zero-arg callable returning a
@@ -71,12 +72,7 @@ def cpu_ab(
     out: dict = {label: [] for label in candidates}
     for _ in range(rounds):
         for label, fn in candidates.items():
-            t0 = stage_totals(spark)
-            start = time.time()
-            n = _force(fn())
-            wall = time.time() - start
-            t1 = stage_totals(spark)
-            out[label].append(
-                {**window_metrics(t0, t1), "wall_s": round(wall, 2), "rows": n}
-            )
+            n, row = measured(spark, lambda: _force(fn()))
+            row["wall_s"] = row.pop("sec")
+            out[label].append({**row, "rows": n})
     return out

@@ -10,8 +10,8 @@ Each stage is materialized to parquet in WORK_DIR (default
 /tmp/pipe_bench) exactly as a production pipeline would checkpoint
 between major stages, so stage timings are additive and each stage's
 metrics (CPU, shuffle bytes, jobs, stages, tasks) are its own.
-Prints one JSON line with per-stage {sec, cpu_s, shuffle_write_mb,
-shuffle_read_mb, jobs, stages, tasks, rows_out}.
+Prints one JSON line with per-stage {sec, cpu_s, py_cpu_s,
+shuffle_write_mb, shuffle_read_mb, jobs, stages, tasks, rows_out}.
 
 On the synthetic corpus every document has K exact copies (the
 make_scale property), so line-granularity dedup degenerates to
@@ -26,11 +26,7 @@ import shutil
 import sys
 import time
 
-from sweeplib import (  # noqa: E402 (sys.path bootstrap lives here)
-    STATUS_CONF,
-    stage_totals,
-    window_metrics,
-)
+from sweeplib import STATUS_CONF, measured  # noqa: E402 (sys.path bootstrap lives here)
 
 from pyspark.sql import functions as F
 
@@ -57,16 +53,8 @@ def main() -> None:
     out: dict[str, dict] = {}
 
     def stage(name: str, fn) -> None:
-        s0 = stage_totals(spark)
-        t0 = time.perf_counter()
-        rows = fn()
-        sec = time.perf_counter() - t0
-        s1 = stage_totals(spark)
-        out[name] = {
-            "sec": round(sec, 1),
-            **window_metrics(s0, s1),
-            "rows_out": rows,
-        }
+        rows, row = measured(spark, fn)
+        out[name] = {**row, "rows_out": rows}
         print(f"  {name}: {out[name]}", file=sys.stderr, flush=True)
 
     def s_redact() -> int:

@@ -21,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 from sweeplib import (  # noqa: E402 (sys.path bootstrap lives here)
     STATUS_CONF,
@@ -29,8 +28,7 @@ from sweeplib import (  # noqa: E402 (sys.path bootstrap lives here)
     control_sec,
     control_samples,
     force as _force,
-    stage_totals,
-    window_metrics,
+    measured,
 )
 
 from pyspark.sql import functions as F
@@ -59,20 +57,19 @@ def main() -> None:
     n_eval, n_train = ev.count(), train.count()
     ref = reference_gram_keys(ev, text_col="text", k=8, hash_family="xxhash64")
 
-    s0 = stage_totals(spark)
-    t0 = time.perf_counter()
-    _force(
-        remove_duplicate_spans(
-            train,
-            id_col="doc_id",
-            text_col="text",
-            k=8,
-            hash_family="xxhash64",
-            reference_keys=ref,
-        )
+    _, row = measured(
+        spark,
+        lambda: _force(
+            remove_duplicate_spans(
+                train,
+                id_col="doc_id",
+                text_col="text",
+                k=8,
+                hash_family="xxhash64",
+                reference_keys=ref,
+            )
+        ),
     )
-    sec = time.perf_counter() - t0
-    s1 = stage_totals(spark)
     print(
         json.dumps(
             {
@@ -81,9 +78,8 @@ def main() -> None:
                 "control_sec": ctl,
                 "n_eval_docs": n_eval,
                 "n_train_docs": n_train,
-                "sec": round(sec, 2),
-                **window_metrics(s0, s1),
-                "normalized_sec": round(sec / ctl, 1) if ctl else None,
+                **row,
+                "normalized_sec": round(row["sec"] / ctl, 1) if ctl else None,
             }
         )
     )

@@ -12,8 +12,8 @@ only a table subset exists at the target SF (e.g. the r6 sf100-class
 run over events/documents/embeddings). Same session defaults as
 bench.py otherwise (AQE on, 32 shuffle partitions, zstd parquet), plus
 the status REST API (sweeplib.STATUS_CONF): the metrics are
-completed-stage deltas around each query's timed passes
-(sweeplib.stage_totals).
+completed-stage deltas around each query's timed passes, plus the
+Python workers' CPU (sweeplib.stage_totals).
 
 Why these columns: wall time alone hides the 100 TB story — a query can
 look fine at sf1 while its shuffle volume grows super-linearly. At
@@ -61,8 +61,9 @@ cross a chunk boundary).
 Prints one JSON line:
   {"sf_dir", "timeout_s", "leaked_threads", "control_sec",
    "control_sec_before", "control_sec_after", "queries": {name: {"sec",
-   "cpu_s", "shuffle_write_mb", "shuffle_read_mb", "jobs", "stages",
-   "tasks"} | {"timeout": true} | {"error": "..."}}, "total_sec"}
+   "cpu_s", "py_cpu_s", "shuffle_write_mb", "shuffle_read_mb", "jobs",
+   "stages", "tasks"} | {"timeout": true} | {"error": "..."}},
+   "total_sec"}
 With ``--chunks`` the chunk outputs merge into one line with "n_chunks",
 "protocol" and "control_sec_per_chunk" in place of the before/after
 control; per-chunk JVM startup is excluded from ``total_sec``, which

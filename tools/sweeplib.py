@@ -1,8 +1,9 @@
 """Shared measurement harness for the tools: noop-sink forcing, ONE
-stage-metrics reader (:func:`stage_totals`), ONE per-case watchdog
-(:func:`run_cases`), the frozen environment control and the
-sf100-class session sizing. One copy, so every sweep, A/B and bench
-measures wall, CPU, shuffle volume and job counts the same way."""
+stage-metrics reader (:func:`stage_totals`) and its window
+(:func:`measured`), ONE per-case watchdog (:func:`run_cases`), the
+frozen environment control and the sf100-class session sizing. One
+copy, so every sweep, A/B and bench measures wall, CPU, shuffle volume
+and job counts the same way."""
 from __future__ import annotations
 
 import json
@@ -16,6 +17,8 @@ import urllib.request
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
+
+from perfbench.proctree import tree_cpu_seconds  # noqa: E402
 
 # extra_conf for ``get_spark``: stage_totals reads the status REST API,
 # and its cumulative sums assume no stage or job row is evicted between
@@ -43,12 +46,16 @@ def _api(sc, path: str):
         return json.load(resp)
 
 
-def stage_totals(spark) -> dict[str, int]:
+def stage_totals(spark) -> dict[str, float]:
     """Cumulative executor CPU (``cpu_ns``), shuffle bytes written and
     read, completed ``stages`` and their ``tasks``, and ``jobs`` of any
     status — callers take deltas around a measured window. These are
     the per-stage counts that separate framework overhead (jobs, stages,
     tasks) from compute (CPU) and data movement (shuffle).
+
+    ``executorCpuTime`` is JVM thread time only, so ``py_cpu_s`` adds
+    the CPU of the live Python workers (this process's ``pyspark.daemon``
+    tree, from ``/proc``): the Arrow/pandas operators' other half.
 
     The status store is fed by an ASYNC listener bus: a read right after
     an action returns can miss just-finished stages, which then bleed
@@ -64,6 +71,7 @@ def stage_totals(spark) -> dict[str, int]:
         "stages": len(stages),
         "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
         "jobs": len(_api(sc, "jobs")),
+        "py_cpu_s": tree_cpu_seconds(os.getpid(), "pyspark.daemon"),
     }
 
 
@@ -79,12 +87,22 @@ def window_metrics(t0: dict, t1: dict, passes: int = 1) -> dict:
 
     return {
         "cpu_s": round(per_pass("cpu_ns") / 1e9, 2),
+        "py_cpu_s": round(per_pass("py_cpu_s"), 2),
         "shuffle_write_mb": round(per_pass("shuffle_write") / 1e6, 1),
         "shuffle_read_mb": round(per_pass("shuffle_read") / 1e6, 1),
         "jobs": count("jobs"),
         "stages": count("stages"),
         "tasks": count("tasks"),
     }
+
+
+def measured(spark, fn) -> tuple:
+    """``fn()``'s result and its window: wall ``sec`` plus
+    :func:`window_metrics`."""
+    t0, start = stage_totals(spark), time.perf_counter()
+    out = fn()
+    sec = time.perf_counter() - start
+    return out, {"sec": round(sec, 2), **window_metrics(t0, stage_totals(spark))}
 
 
 def run_cases(
