@@ -13,9 +13,9 @@ Scale design:
     Frequent-shingle hot keys are the skew risk → ``max_shingle_df`` drops
     shingles appearing in more than N docs (standard inverted-index stop
     list), bounding any single join key's fan-out.
-  * MinHash+LSH: k hash functions via Spark's murmur3 ``F.hash(col, seed)``
-    over the shingle array (array_min of transform — no explode), banded
-    into b buckets; candidate pairs join only within (band, bucket-hash).
+  * MinHash+LSH: k portable ``(A_i·sh + B_i) mod P`` hash functions as
+    min-aggregates over exploded shingle postings, banded into b
+    buckets; candidate pairs join only within (band, band key).
     Verification re-checks exact Jaccard on candidates only.
   * SimHash: 64-bit fingerprint via xxhash64 bit-vote aggregation entirely
     in array expressions; near-dups = equal fingerprint (or banded hamming).
@@ -27,6 +27,7 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 # Frames the batch dedup operators persist (shingle projections, band
@@ -514,7 +515,6 @@ def lsh_band_rows(
     shingles_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """(id, band_id, band_hash) rows for LSH bucketing.
 
@@ -525,21 +525,24 @@ def lsh_band_rows(
     reusable subplan, so the downstream self-join computes the signatures
     ONCE (ReusedExchange) instead of once per join side.
 
-    ``hash_family='murmur3'`` (default): xxhash64 base + ``F.hash(base,
-    seed_i)`` members, band hash murmur3 over the raw ints — the fast
-    JVM-only scale path (engine-specific → not SQL-oracle'd).
-    ``hash_family='md5'``: expects shingles ALREADY hashed by
-    :func:`portable_hashed_shingles` (portable 48-bit values); members
-    ``(A_i·(sh mod P) + B_i) mod P`` over a Mersenne-prime field, band
-    key the '|'-joined member values — every step exists verbatim in
-    DuckDB, so the whole LSH pipeline is cross-engine hash-checkable
-    (used by the oracled registry query, same pattern as
-    ``textstats.winnowing_fingerprints``)."""
+    One portable family: members ``(A_i·(sh mod P) + B_i) mod P`` over a
+    Mersenne-prime field, band key the '|'-joined member values — every
+    step exists verbatim in DuckDB, so the whole LSH pipeline is
+    cross-engine hash-checkable (used by the oracled registry query,
+    same pattern as ``textstats.winnowing_fingerprints``). Integral
+    shingles (:func:`portable_hashed_shingles`,
+    :func:`hashed_word_shingles`) enter the field as they are — a signed
+    long's ``sh mod P`` has magnitude below 2^31, so ``A_i·base`` cannot
+    overflow; any other element type (string shingles) is first hashed
+    to a long with xxhash64."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     posting = df.filter(F.size(shingles_col) > 0).select(
         F.col(id_col).alias("id"), F.explode(shingles_col).alias("sh")
     )
+    sh = F.col("sh")
+    if not isinstance(posting.schema["sh"].dataType, IntegralType):
+        sh = F.xxhash64(sh)
     # The k member aggregates and band hashes are built as SQL STRINGS
     # parsed by F.expr — ONE py4j round trip per expression instead of
     # one per operator node. The column-API construction of 32 aggs
@@ -548,43 +551,24 @@ def lsh_band_rows(
     # strings: 0.029 s, identical resolved plans — equality pinned by
     # tests/test_dedup_simsearch.py). At 100 TB the same second is
     # spent per submitted job; it is pure overhead either way.
-    if hash_family == "murmur3":
-        # Hash the (variable-length) shingle string ONCE; derive the
-        # k-member hash family from the fixed-width 8-byte base — murmur3
-        # over 12 bytes per member instead of re-hashing the whole string
-        # k times. (No arithmetic mixing: long multiply overflows throw
-        # under ANSI mode.) ``hash(base, i)`` == F.hash("base", F.lit(i)):
-        # murmur3 over the two columns with the literal int as the second.
-        based = posting.select("id", F.xxhash64("sh").alias("base"))
-        sig = based.groupBy("id").agg(
-            *[F.expr(f"min(hash(base, {i})) AS h{i}") for i in range(num_hashes)]
+    coeffs = minhash_coefficients(num_hashes)
+    based = posting.select("id", (sh % F.lit(MINHASH_P)).alias("base"))
+    # {a}L / {b}L: long literals so the arithmetic is long×long —
+    # the same types the column API produced via F.lit(int)*long.
+    sig = based.groupBy("id").agg(
+        *[
+            F.expr(f"min(({a}L * base + {b}L) % {MINHASH_P}L) AS h{i}")
+            for i, (a, b) in enumerate(coeffs)
+        ]
+    )
+
+    def _band_hash(b: int) -> Column:
+        cols = ", ".join(
+            f"CAST(h{b * rows_per_band + j} AS STRING)"
+            for j in range(rows_per_band)
         )
-        def _band_hash(b: int) -> Column:
-            cols = ", ".join(
-                f"h{b * rows_per_band + j}" for j in range(rows_per_band)
-            )
-            return F.expr(f"hash({cols})")
-    elif hash_family == "md5":
-        coeffs = minhash_coefficients(num_hashes)
-        based = posting.select(
-            "id", (F.col("sh") % F.lit(MINHASH_P)).alias("base")
-        )
-        # {a}L / {b}L: long literals so the arithmetic is long×long —
-        # the same types the column API produced via F.lit(int)*long.
-        sig = based.groupBy("id").agg(
-            *[
-                F.expr(f"min(({a}L * base + {b}L) % {MINHASH_P}L) AS h{i}")
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        )
-        def _band_hash(b: int) -> Column:
-            cols = ", ".join(
-                f"CAST(h{b * rows_per_band + j} AS STRING)"
-                for j in range(rows_per_band)
-            )
-            return F.expr(f"concat_ws('|', {cols})")
-    else:  # pragma: no cover - guarded upstream
-        raise ValueError(f"unsupported hash_family {hash_family!r}")
+        return F.expr(f"concat_ws('|', {cols})")
+
     band_structs = [
         F.struct(F.lit(b).alias("band_id"), _band_hash(b).alias("band_hash"))
         for b in range(bands)
@@ -601,15 +585,12 @@ def lsh_candidate_pairs(
     shingles_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """LSH-banded candidate pairs (id_a < id_b), deduplicated across bands.
 
     Pairs colliding in ≥1 band survive. The join key (band_id, band_hash)
     is high-entropy, so the self-join shuffles evenly; at 100TB the band
     rows are the only materialization (one hash per doc per band)."""
-    from pyspark import StorageLevel
-
     # Persist the tiny (id, band_id, band_hash) rows: when the input is
     # itself cached, the two self-join sides otherwise each recompute the
     # 32-way signature aggregate from the cache (AQE does not reuse an
@@ -622,7 +603,6 @@ def lsh_candidate_pairs(
         shingles_col=shingles_col,
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
     ).transform(_persist_tracked)
     a = band_rows.alias("a")
     b = band_rows.alias("b")
@@ -646,7 +626,6 @@ def minhash_lsh_dedup_pairs(
     threshold: float,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard ≥ threshold (the standard
     minhash-LSH near-dup pipeline: band → bucket-join → verify).
@@ -660,8 +639,6 @@ def minhash_lsh_dedup_pairs(
     persisted (MEMORY_AND_DISK: spills rather than OOMs at scale) —
     without it the tokenize/shingle expressions are re-evaluated once per
     consumer."""
-    from pyspark import StorageLevel
-
     sh_df = df.select(
         F.col(id_col).alias("id"), F.col(shingles_col).alias("obj")
     ).transform(_persist_tracked)
@@ -679,7 +656,6 @@ def minhash_lsh_dedup_pairs(
             shingles_col="sh",
             num_hashes=num_hashes,
             bands=bands,
-            hash_family=hash_family,
         )
         pairs = cands.join(
             sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a"
@@ -824,16 +800,6 @@ def simhash_table(
     )
     return votes.select(
         "id", _assemble_fp(n_bits, lambda b: F.col(f"v{b}")).alias("fp")
-    )
-
-
-def simhash_dedup_groups(df: DataFrame, *, id_col: str, tokens: Column | str) -> DataFrame:
-    """(simhash, canonical_id, n_dups) — identical-fingerprint grouping."""
-    return (
-        simhash_table(df, id_col=id_col, tokens=tokens)
-        .select(F.col("id"), F.col("fp").alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.min("id").alias("canonical_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 

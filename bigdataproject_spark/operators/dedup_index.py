@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from bigdataproject_spark.operators.dedup import _plan_size_bytes, lsh_band_rows
 
@@ -48,6 +49,23 @@ def _prepared(
     )
 
 
+def _checked_bands(bands: DataFrame, path: str) -> DataFrame:
+    """``bands`` (a read of the index's bands table) when its band keys
+    are the portable family's strings. An int ``band_hash`` is a store
+    written by the retired engine-specific family: its keys never
+    match, and appending string rows beside them breaks every later
+    read with a cast error — so refuse it by name, before anything is
+    written."""
+    t = bands.schema["band_hash"].dataType
+    if not isinstance(t, StringType):
+        raise IOError(
+            f"minhash index {path}: stored band_hash is "
+            f"{t.simpleString()}, written by the retired murmur3 MinHash "
+            f"family; rebuild the index with write_minhash_index"
+        )
+    return bands
+
+
 def write_minhash_index(
     docs: DataFrame,
     path: str,
@@ -56,7 +74,6 @@ def write_minhash_index(
     shingles_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
     append: bool = False,
     lease_owner: str | None = None,
 ) -> None:
@@ -89,11 +106,15 @@ def write_minhash_index(
     the versioned generations if rebuilds must be concurrent with
     readers.
 
-    The same (num_hashes, bands, hash_family) MUST be used for every
-    write and query against one index path — band keys from different
-    families never collide, so a mismatch silently finds nothing;
-    callers keep the parameters with the path (they are also the
-    arguments of :func:`incremental_minhash_pairs`)."""
+    The same (num_hashes, bands) and the same shingle element type MUST
+    be used for every write and query against one index path — band
+    keys of different signatures never collide, so a mismatch silently
+    finds nothing; callers keep the parameters with the path (they are
+    also the arguments of :func:`incremental_minhash_pairs`). Band keys
+    are the portable MinHash family's '|'-joined member strings
+    (:func:`~bigdataproject_spark.operators.dedup.lsh_band_rows`); a
+    store whose ``band_hash`` is not a string predates that family and
+    is refused by every reader of the bands table."""
     from bigdataproject_spark.operators.versioned import (
         TableMissingError,
         publish_pair,
@@ -109,7 +130,6 @@ def write_minhash_index(
         shingles_col=shingles_col,
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
     )
     prep = _prepared(docs, id_col=id_col, shingles_col=shingles_col)
     if append:
@@ -154,7 +174,6 @@ def _append_band_rows(
     id_col: str,
     num_hashes: int,
     bands: int,
-    hash_family: str,
 ) -> None:
     """Append exactly the MISSING band rows for the already-member
     ``heal_ids`` (no shingle / membership rows) — the heal half of the
@@ -188,9 +207,10 @@ def _append_band_rows(
         shingles_col="sh",
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
     )
-    stored = spark.read.parquet(live).join(ids, "id", "left_semi")
+    stored = _checked_bands(spark.read.parquet(live), path).join(
+        ids, "id", "left_semi"
+    )
     missing = want.join(
         stored, ["id", "band_id", "band_hash"], "left_anti"
     ).localCheckpoint()
@@ -211,7 +231,6 @@ def incremental_minhash_pairs(
     threshold: float,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """Verified near-dup pairs touching the new batch: (id_a, id_b,
     jaccard, vs_index) where id_a is always a new-batch doc, id_b is a
@@ -238,11 +257,12 @@ def incremental_minhash_pairs(
         shingles_col=shingles_col,
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
     )
     from bigdataproject_spark.operators.versioned import table_read_dir
 
-    stored_bands = spark.read.parquet(table_read_dir(spark, path, "bands"))
+    stored_bands = _checked_bands(
+        spark.read.parquet(table_read_dir(spark, path, "bands")), path
+    )
     stored_sh = spark.read.parquet(table_read_dir(spark, path, "shingles"))
 
     nb = new_bands.select(
@@ -345,7 +365,6 @@ def accept_batch(
     threshold: float,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
     lease_owner: str | None = None,
 ) -> DataFrame:
     """The full incremental step: find the batch docs that are NOT
@@ -384,7 +403,6 @@ def accept_batch(
         threshold=threshold,
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
     )
     # checkpointed so the heal append below rereads the materialized id
     # set instead of re-scanning the shingles store
@@ -410,7 +428,6 @@ def accept_batch(
             shingles_col=shingles_col,
             num_hashes=num_hashes,
             bands=bands,
-            hash_family=hash_family,
             append=True,
             lease_owner=owner,
         )
@@ -436,7 +453,6 @@ def accept_batch(
                 id_col=id_col,
                 num_hashes=num_hashes,
                 bands=bands,
-                hash_family=hash_family,
             )
     finally:
         from bigdataproject_spark.session import release_local_checkpoint
@@ -560,16 +576,23 @@ def _compact_index_leased(
             if st.getPath().getName().endswith(".parquet")
         )
 
-    # resolve both tables first: a failure leaves the index untouched
+    # resolve and snapshot both tables first, shingles first (the order
+    # above): a failure, or a bands table of the retired hash family,
+    # leaves the index untouched. Band files landing after the bands
+    # snapshot are folded in by the late-file sweep below.
     prevs = {t: table_read_dir(spark, path, t) for t in ("shingles", "bands")}
+    snaps = {t: _part_files(d) for t, d in prevs.items()}
+    # an empty-but-valid table (ensure_index bootstraps 0-row frames)
+    # can have no part files at all — read the dir so the schema still
+    # resolves from the directory footer behavior
+    frames = {
+        t: spark.read.parquet(*snaps[t]) if snaps[t] else spark.read.parquet(d)
+        for t, d in prevs.items()
+    }
+    _checked_bands(frames["bands"], path)
     stats: dict[str, dict[str, int]] = {}
     for table, keys in (("shingles", ["id"]), ("bands", ["band_hash"])):
-        prev = prevs[table]
-        snap = _part_files(prev)
-        # an empty-but-valid table (ensure_index bootstraps 0-row
-        # frames) can have no part files at all — read the dir so the
-        # schema still resolves from the directory footer behavior
-        df = spark.read.parquet(*snap) if snap else spark.read.parquet(prev)
+        prev, snap, df = prevs[table], snaps[table], frames[table]
         if table == "bands":
             # a crash between a replayed append's bands write and its
             # shingles write leaves duplicate band rows (idempotence is

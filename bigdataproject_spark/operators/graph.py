@@ -218,12 +218,3 @@ def graph_topology(
     # sort was presentation-only — the driver value-hash sorts rows
     # itself — and cost the plan's only range exchange + sort.
     return nodes.unionByName(edges)
-
-
-def build_graph(
-    df: DataFrame, text_col: str, alias_to_canonical: Mapping[str, str]
-) -> tuple[DataFrame, DataFrame]:
-    """(nodes, edges) from a raw text table; input cached for the two
-    consumers (M1, danmaku_analysis_cluster.py:128)."""
-    ent = extract_entity_table(df, text_col, alias_to_canonical).cache()
-    return graph_nodes(ent), graph_edges(ent)

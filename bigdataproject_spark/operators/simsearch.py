@@ -427,12 +427,17 @@ def _fit_quantizer(
     seed: int,
     max_iter: int,
 ):
-    """Shared IVF quantizer fit (ivf_topk and ivf_write_index must stay
-    in lockstep — same featurization, clamping, and seeding). Returns
-    (assigned, centroids, k_eff, n_rows, sum_d2) or None for an empty
-    corpus; ``sum_d2`` is the KMeans training cost (Σ squared L2 to the
-    assigned centroid) — the build-time quantization quality the drift
-    metric of :func:`ivf_append_index` is measured against."""
+    """The KMeans quantizer fit of :func:`ivf_write_index`: clamps the
+    cell count to the corpus size, seeds the fit, and assigns every
+    vector its cell. ``max_iter=8`` (vs MLlib's default 20): a coarse
+    quantizer only partitions space — loose convergence shifts cell
+    boundaries, and multi-probe already covers boundary loss, so extra
+    Lloyd iterations buy recall nothing measurable while the fit
+    dominates the build. Returns (assigned, centroids, k_eff, n_rows,
+    sum_d2) or None for an empty corpus; ``sum_d2`` is the KMeans
+    training cost (Σ squared L2 to the assigned centroid) — the
+    build-time quantization quality the drift metric of
+    :func:`ivf_append_index` is measured against."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -456,95 +461,6 @@ def _fit_quantizer(
         (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
     ]
     return assigned, centroids, k_eff, n_rows, float(model.summary.trainingCost)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    exclude_self: bool = True,
-    seed: int = 42,
-    max_iter: int = 8,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: KMeans coarse quantizer +
-    multi-probe. ``max_iter=8`` (vs MLlib's default 20): a coarse
-    quantizer only partitions space — loose convergence shifts cell
-    boundaries, and multi-probe already covers boundary loss, so extra
-    Lloyd iterations buy recall nothing measurable while the fit
-    dominates the query's wall time.
-
-    Train-once/search-many: the corpus is partitioned into ``n_centroids``
-    KMeans cells (pyspark.ml, JVM-side); each query probes only its
-    ``n_probe`` nearest cells, so compared pairs shrink by roughly
-    n_probe/n_centroids versus brute force while multi-probe recovers most
-    boundary-loss recall (the standard IVF trade; raise n_probe for
-    recall, n_centroids for speed). The centroid table is tiny and
-    broadcast; at 100TB the corpus would additionally be written
-    partitioned/bucketed by ``cell`` so a probe prunes file I/O, not just
-    the join. Each query ROW is probed on its own (:func:`_probe_plan`):
-    q_id should be unique, as rows sharing one are ranked as one query.
-    """
-    fitted = _fit_quantizer(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        seed=seed,
-        max_iter=max_iter,
-    )
-    if fitted is None:
-        # KMeans cannot fit zero rows; empty corpus → empty result with
-        # the output schema
-        q0 = queries.select(F.col(id_col).alias("q_id"))
-        return q0.limit(0).select(
-            "q_id",
-            F.lit(None).cast("long").alias("neighbor_id"),
-            F.lit(None).cast("double").alias("cosine"),
-            F.lit(None).cast("int").alias("rank"),
-        )
-    assigned, centroids, n_centroids, _, _ = fitted
-    return _ivf_search(
-        assigned,
-        centroids,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        n_probe=min(n_probe, n_centroids),
-        exclude_self=exclude_self,
-    )
-
-
-def _ivf_search(
-    assigned: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_probe: int,
-    exclude_self: bool,
-) -> DataFrame:
-    """Shared IVF search tail: probe the ``n_probe`` nearest cells per
-    query (:func:`_probe_plan`, squared-L2 — the quantizer's metric),
-    then rank by cosine within the probed cells. Used by both the
-    KMeans and the sample quantizer."""
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(vec_col).alias("qn"),
-    )
-    probes = _probe_plan(q, centroids, n_probe)
-    joined = assigned.join(F.broadcast(probes), on="cell")
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("q_id"))
-    return _rank_topk(joined, k)
 
 
 def sample_centroids(
@@ -680,14 +596,16 @@ def ivf_topk_sampleq(
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k with the deterministic sample quantizer
-    (:func:`sample_centroids`): same multi-probe search mechanics as
-    :func:`ivf_topk` (shared ``_ivf_search`` tail), but every stage —
-    centroid pick, cell assignment, probe selection, cosine ranking —
+    (:func:`sample_centroids`): each query probes its ``n_probe``
+    nearest cells (:func:`_probe_plan`, squared-L2 — the quantizer's
+    metric), then ranks by cosine within the probed cells. Every stage
+    — centroid pick, cell assignment, probe selection, cosine ranking —
     is reproducible in ANSI SQL, which makes this the hash-checkable
     registry variant. Cell assignment is a map-side literal-centroid
     argmin (:func:`assign_cell_expr`), so the corpus is never shuffled
     for the assignment — the same scale shape as KMeans transform.
-    Repeated q_ids behave as in :func:`ivf_topk`."""
+    Each query ROW is probed on its own: q_id should be unique, as rows
+    sharing one are ranked as one query."""
     centroids = sample_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids
     )
@@ -707,16 +625,16 @@ def ivf_topk_sampleq(
     ).select(
         "neighbor_id", "cv", "cn", assign_cell_expr("_vd", centroids).alias("cell")
     )
-    return _ivf_search(
-        assigned,
-        centroids,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        n_probe=min(n_probe, len(centroids)),
-        exclude_self=exclude_self,
+    q = queries.select(
+        F.col(id_col).alias("q_id"),
+        F.col(vec_col).alias("qv"),
+        l2_norm(vec_col).alias("qn"),
     )
+    probes = _probe_plan(q, centroids, min(n_probe, len(centroids)))
+    joined = assigned.join(F.broadcast(probes), on="cell")
+    if exclude_self:
+        joined = joined.filter(F.col("neighbor_id") != F.col("q_id"))
+    return _rank_topk(joined, k)
 
 
 def ivf_write_index(
@@ -730,10 +648,10 @@ def ivf_write_index(
     max_iter: int = 8,
     lease_owner: str | None = None,
 ) -> None:
-    """Materialize the IVF index: corpus written Hive-partitioned by cell
-    plus a centroid table — the train-once/search-many storage layout
-    :func:`ivf_topk` computes in memory (same quantizer fit:
-    :func:`_fit_quantizer`).
+    """Materialize the IVF index: a KMeans coarse quantizer
+    (:func:`_fit_quantizer`) and the corpus written Hive-partitioned by
+    cell plus a centroid table — the train-once/search-many layout
+    :func:`ivf_topk_indexed` probes.
 
     At 100 TB this is the shape that matters: a probe then prunes file
     I/O (``PartitionFilters`` on ``cell=``), not just the join, so a
@@ -997,9 +915,11 @@ def _collect_index_centroids(
     collect (≤ n_centroids rows) read through the fixed schema (no
     inference job), sorted by cell driver-side (no range-exchange sort)
     so the fold's tie-break is deterministic across calls."""
+    # the part files, not the dir: a root path whose leaf starts with
+    # ``_`` is hidden to Spark's file index
     rows = (
         spark.read.schema(_CENTROIDS_SCHEMA)
-        .parquet(_centroids_dir(spark, path, cells_dir))
+        .parquet(f"{_centroids_dir(spark, path, cells_dir)}/part-*")
         .collect()
     )
     return sorted((int(r["cell"]), [float(x) for x in r["ctr"]]) for r in rows)
@@ -1678,7 +1598,7 @@ def ivf_topk_indexed(
     path once — its collected rows carry the cells. Each query ROW is
     probed on its own, so q_id should be unique (rows sharing one are
     ranked as one query). Semantics identical to
-    :func:`ivf_topk` given the same centroids; with
+    :func:`ivf_topk_sampleq` given the same centroids; with
     ``n_probe >= n_centroids`` it equals exact brute force (tested).
 
     ``impl='blas'``: the per-pair interpreted cosine (a higher-order

@@ -130,21 +130,6 @@ def quality_features(text: Column | str, tokens: Column | str) -> dict[str, Colu
     }
 
 
-def hashed_tokens_expr(tokens: Column | str) -> Column:
-    """xxhash64 each token once (array<string> → array<bigint>).
-
-    r13: no longer used by the stock repetition/lang queries — the
-    repetition kernel hashes neighbor PAIRS directly inside its one
-    zip_with (see :func:`repetition_features`), so a whole-array
-    pre-hash pass buys nothing. Kept as the composable utility for
-    callers that genuinely reference a hashed token array more than
-    once (bind it to a NAMED column — CollapseProject keeps a
-    non-cheap alias referenced more than once single-evaluated; HOFs
-    run interpreted, outside codegen CSE)."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.transform(t, lambda x: F.xxhash64(x))
-
-
 def repetition_features(tokens: Column | str) -> dict[str, Column]:
     """Gopher-style repetition signals over the token array (Rae et al.
     2021 §A1.1 repetition filters, re-expressed for word-soup docs) —

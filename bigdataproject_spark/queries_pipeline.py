@@ -151,12 +151,10 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim by the DuckDB oracle (hash-checked, not rows-only; even
     hash collisions mirror bit-for-bit because both engines compute the
     same md5). One md5 per distinct shingle; no shingle strings leave
-    the projection. The xxhash64/murmur3 family remains the default
-    fast path of ``minhash_lsh_dedup_pairs`` for production corpora
-    (unit-tested in tests/test_dedup_simsearch.py); physical shape —
-    explode→min-aggregate signatures behind a reused exchange, banded
-    equi-join, exact verify on candidates only — is identical in both
-    families."""
+    the projection. ``minhash_lsh_dedup_pairs`` has one hash family, so
+    production corpora run the same signatures and band keys over the
+    cheaper xxhash64 shingles (``hashed_word_shingles``); only the
+    shingle kernel differs."""
     docs = _docs_tokens(spark, sf_dir, fan=True).withColumn(
         "shingles", portable_hashed_shingles("tokens", JACCARD_N)
     )
@@ -167,7 +165,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=JACCARD_THRESHOLD,
         num_hashes=32,
         bands=8,
-        hash_family="md5",
     )
 
 
@@ -476,10 +473,10 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest ids) — every stage is plain SQL, so this entry is
     hash-checked against DuckDB end-to-end (centroid pick, map-side
     argmin cell assignment, multi-probe, cosine rank). The KMeans
-    quantizer path (`ivf_topk`) keeps its own equality bound test
-    (full-probe == brute force) and the materialized partition-pruned
-    index (`ivf_topk_indexed`). Completes the ANN trio: exact brute
-    force / LSH sign-buckets / IVF."""
+    quantizer lives in the materialized partition-pruned index
+    (`ivf_write_index` + `ivf_topk_indexed`), with its own equality
+    bound test (full-probe == brute force). Completes the ANN trio:
+    exact brute force / LSH sign-buckets / IVF."""
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_topk_sampleq(
         emb,

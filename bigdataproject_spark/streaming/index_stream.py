@@ -95,7 +95,6 @@ def ensure_index(
     shingles_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
     lease_owner: str | None = None,
 ) -> None:
     """Bootstrap an EMPTY index at ``path`` if none exists (zero-row
@@ -119,7 +118,6 @@ def ensure_index(
         shingles_col=shingles_col,
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
         lease_owner=lease_owner,
     )
 
@@ -133,7 +131,6 @@ def make_index_batch_writer(
     threshold: float,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
     compact_every_n_batches: int | None = None,
     compact_min_band_files: int | None = None,
     lease_owner: str | None = None,
@@ -183,7 +180,6 @@ def make_index_batch_writer(
             shingles_col=shingles_col,
             num_hashes=num_hashes,
             bands=bands,
-            hash_family=hash_family,
             lease_owner=owner,
         )
         out_dir = f"{out_path}/batch={batch_id}"
@@ -208,7 +204,6 @@ def make_index_batch_writer(
                 threshold=threshold,
                 num_hashes=num_hashes,
                 bands=bands,
-                hash_family=hash_family,
             )
             already = batch_df.select(id_col).join(
                 stored_ids, id_col, "left_semi"
@@ -241,7 +236,6 @@ def make_index_batch_writer(
                 shingles_col=shingles_col,
                 num_hashes=num_hashes,
                 bands=bands,
-                hash_family=hash_family,
                 append=True,
                 lease_owner=owner,
             )
@@ -276,7 +270,6 @@ def make_index_batch_writer(
                     id_col=id_col,
                     num_hashes=num_hashes,
                     bands=bands,
-                    hash_family=hash_family,
                 )
         finally:
             # r7: the per-batch id-set checkpoint is fully consumed by
@@ -328,7 +321,6 @@ def stream_dedup_to_index(
     threshold: float = 0.8,
     num_hashes: int = 32,
     bands: int = 8,
-    hash_family: str = "murmur3",
     compact_every_n_batches: int | None = None,
     compact_min_band_files: int | None = None,
 ):
@@ -346,7 +338,6 @@ def stream_dedup_to_index(
         threshold=threshold,
         num_hashes=num_hashes,
         bands=bands,
-        hash_family=hash_family,
         compact_every_n_batches=compact_every_n_batches,
         compact_min_band_files=compact_min_band_files,
         lease_owner=f"dedup-stream:{checkpoint}",

@@ -47,7 +47,7 @@ def _dup_heavy(spark):
 
 def _minhash(df):
     return minhash_lsh_dedup_pairs(
-        df, id_col="doc_id", shingles_col="sh", threshold=0.5, hash_family="md5"
+        df, id_col="doc_id", shingles_col="sh", threshold=0.5
     )
 
 

@@ -560,3 +560,48 @@ def test_changed_content_resubmission_does_not_pollute_bands(spark, tmp_path):
         threshold=THRESHOLD,
     ).collect()
     assert bands_snapshot() == before
+
+
+def test_store_of_retired_hash_family_is_refused_untouched(spark, tmp_path):
+    """A store whose bands carry an int ``band_hash`` (written by the
+    retired murmur3 family) shares no key with the portable family's
+    string band keys. Appending string rows beside them would break
+    every later read with a bare cast error, so the append, the query,
+    the heal and the compaction each refuse the store by name, and
+    nothing under the index root changes."""
+    import os
+
+    from bigdataproject_spark.operators.dedup_index import _append_band_rows
+
+    old = _docs(spark, OLD_ROWS)
+    new = _docs(spark, NEW_ROWS)
+    idx = str(tmp_path / "idx")
+    write_minhash_index(old, idx, id_col="doc_id", shingles_col="shingles")
+    spark.createDataFrame(
+        [(i, b, i * 31 + b) for i in (1, 2, 3, 4) for b in range(8)],
+        "id long, band_id int, band_hash int",
+    ).write.mode("overwrite").parquet(f"{idx}/bands")
+
+    def tree():
+        out = {}
+        for root, _, files in os.walk(idx):
+            for f in files:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, idx)] = fh.read()
+        return out
+
+    before = tree()
+    kw = dict(id_col="doc_id", shingles_col="shingles", threshold=THRESHOLD)
+    refused = "murmur3.*rebuild the index with write_minhash_index"
+    with pytest.raises(IOError, match=refused):
+        accept_batch(spark, new, idx, **kw)
+    with pytest.raises(IOError, match=refused):
+        incremental_minhash_pairs(spark, new, idx, **kw)
+    with pytest.raises(IOError, match=refused):
+        _append_band_rows(
+            old.select("doc_id"), idx, id_col="doc_id", num_hashes=32, bands=8
+        )
+    with pytest.raises(IOError, match=refused):
+        compact_index(spark, idx)
+    assert tree() == before

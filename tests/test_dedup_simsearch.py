@@ -592,9 +592,10 @@ def test_expr_built_signatures_match_column_api(spark):
     and band hashes as F.expr SQL strings (one py4j round trip each —
     the column-API construction of 32 aggs measured 1.5 s of pure
     driver latency per query build). The parsed expressions must stay
-    value-identical to the column-API originals for BOTH hash
-    families, or the md5 family silently drifts from its DuckDB
-    oracle."""
+    value-identical to the column-API originals for BOTH shingle
+    element types — integral shingles enter the field as they are,
+    string shingles through an xxhash64 base — or the family silently
+    drifts from its DuckDB oracle."""
     from pyspark.sql import functions as F
 
     from bigdataproject_spark.operators.dedup import (
@@ -614,48 +615,36 @@ def test_expr_built_signatures_match_column_api(spark):
     # before the expr-string rewrite
     posting = docs.filter(F.size("sh") > 0).select("id", F.explode("sh").alias("s"))
     refs = {}
-    for fam, base_col in (
-        ("md5", (F.col("s") % F.lit(MINHASH_P)).alias("base")),
-        ("murmur3", F.xxhash64(F.col("s").cast("string")).alias("base")),
+    for arm, base_col in (
+        ("bigint", F.col("s") % F.lit(MINHASH_P)),
+        ("string", F.xxhash64(F.col("s").cast("string")) % F.lit(MINHASH_P)),
     ):
-        based = posting.select("id", base_col)
-        if fam == "md5":
-            aggs = [
-                F.min((F.lit(a) * F.col("base") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        else:
-            aggs = [
-                F.min(F.hash("base", F.lit(i))).alias(f"h{i}")
-                for i in range(num_hashes)
-            ]
-        refs[fam] = {r["id"]: tuple(r[f"h{i}"] for i in range(num_hashes))
+        based = posting.select("id", base_col.alias("base"))
+        aggs = [
+            F.min((F.lit(a) * F.col("base") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
+            for i, (a, b) in enumerate(coeffs)
+        ]
+        refs[arm] = {r["id"]: tuple(r[f"h{i}"] for i in range(num_hashes))
                      for r in based.groupBy("id").agg(*aggs).collect()}
 
-    for fam, shingles in (
-        ("md5", docs),
-        ("murmur3", docs.select("id", F.transform("sh", lambda x: x.cast("string")).alias("sh"))),
+    for arm, shingles in (
+        ("bigint", docs),
+        ("string", docs.select("id", F.transform("sh", lambda x: x.cast("string")).alias("sh"))),
     ):
         rows = lsh_band_rows(
             shingles, id_col="id", shingles_col="sh",
-            num_hashes=num_hashes, bands=bands, hash_family=fam,
+            num_hashes=num_hashes, bands=bands,
         ).collect()
         # every (id, band) present exactly once, and the band hash is a
         # pure function of the reference signature values
         seen = {}
         for r in rows:
             seen.setdefault(r.id, {})[r.band_id] = r.band_hash
-        assert set(seen) == set(refs[fam])
+        assert set(seen) == set(refs[arm])
         rpb = num_hashes // bands
         for i, by_band in seen.items():
-            sig = refs[fam][i]
+            sig = refs[arm][i]
             assert len(by_band) == bands
             for b in range(bands):
-                if fam == "md5":
-                    expect = "|".join(str(sig[b * rpb + j]) for j in range(rpb))
-                    assert by_band[b] == expect, (fam, i, b)
-                else:
-                    # murmur3 band hash is hash(h_i...) — recompute via SQL
-                    cols = ", ".join(str(sig[b * rpb + j]) for j in range(rpb))
-                    expect = spark.sql(f"SELECT hash({cols}) AS h").first().h
-                    assert by_band[b] == expect, (fam, i, b)
+                expect = "|".join(str(sig[b * rpb + j]) for j in range(rpb))
+                assert by_band[b] == expect, (arm, i, b)

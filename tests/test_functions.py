@@ -207,22 +207,3 @@ def test_cube_equals_grouping_sets(spark, sf_dir):
     a = sorted(map(tuple, via_cube.collect()))
     b = sorted(map(tuple, q_grouping_sets(spark, sf_dir).collect()))
     assert a == b
-
-
-def test_simhash_dedup_groups(spark):
-    """Identical token multisets share a fingerprint group; the group
-    carries the min id as canonical and the duplicate count."""
-    from bigdataproject_spark.operators.dedup import simhash_dedup_groups
-
-    df = spark.createDataFrame(
-        [
-            Row(id=3, t=["a", "b", "c"]),
-            Row(id=1, t=["a", "b", "c"]),
-            Row(id=2, t=["x", "y", "z"]),
-        ]
-    )
-    got = {
-        r.canonical_id: r.n_dups
-        for r in simhash_dedup_groups(df, id_col="id", tokens="t").collect()
-    }
-    assert got == {1: 2, 2: 1}

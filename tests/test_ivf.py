@@ -5,7 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bigdataproject_spark.operators.simsearch import brute_force_topk, ivf_topk
+from bigdataproject_spark.operators.simsearch import (
+    brute_force_topk,
+    ivf_topk_indexed,
+    ivf_write_index,
+)
 from bigdataproject_spark.sources.readers import load_table
 
 
@@ -16,29 +20,18 @@ def _topk_sets(rows):
     return out
 
 
-def test_full_probe_equals_brute_force(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 3)
-    exact = brute_force_topk(emb, q, id_col="vec_id", vec_col="embedding", k=5)
-    full = ivf_topk(
-        emb, q, id_col="vec_id", vec_col="embedding", k=5,
-        n_centroids=8, n_probe=8,
-    )
-    e = sorted((r.q_id, r.rank, r.neighbor_id, r.cosine) for r in exact.collect())
-    f = sorted((r.q_id, r.rank, r.neighbor_id, r.cosine) for r in full.collect())
-    assert e == f
-
-
-def test_partial_probe_recall(spark, sf_dir):
+def test_partial_probe_recall(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     exact = _topk_sets(
         brute_force_topk(emb, q, id_col="vec_id", vec_col="embedding", k=10).collect()
     )
+    idx = str(tmp_path / "ivf_index")
+    ivf_write_index(emb, idx, id_col="vec_id", vec_col="embedding", n_centroids=16)
     approx = _topk_sets(
-        ivf_topk(
-            emb, q, id_col="vec_id", vec_col="embedding", k=10,
-            n_centroids=16, n_probe=6,
+        ivf_topk_indexed(
+            spark, idx, q, id_col="vec_id", vec_col="embedding", k=10,
+            n_probe=6,
         ).collect()
     )
     recalls = [
@@ -49,20 +42,16 @@ def test_partial_probe_recall(spark, sf_dir):
     assert sum(recalls) / len(recalls) >= 0.5
 
 
-def test_empty_corpus(spark, sf_dir):
+def test_tiny_corpus_clamps_centroids(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
-    out = ivf_topk(
-        emb.limit(0), emb.limit(3), id_col="vec_id", vec_col="embedding", k=5
+    idx = str(tmp_path / "ivf_index")
+    ivf_write_index(
+        emb.filter(F.col("vec_id") < 4), idx, id_col="vec_id",
+        vec_col="embedding", n_centroids=16,
     )
-    assert out.count() == 0
-    assert out.columns == ["q_id", "neighbor_id", "cosine", "rank"]
-
-
-def test_tiny_corpus_clamps_centroids(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = ivf_topk(
-        emb.filter(F.col("vec_id") < 4), emb.filter(F.col("vec_id") < 2),
-        id_col="vec_id", vec_col="embedding", k=5, n_centroids=16, n_probe=4,
+    out = ivf_topk_indexed(
+        spark, idx, emb.filter(F.col("vec_id") < 2),
+        id_col="vec_id", vec_col="embedding", k=5, n_probe=4,
     )
     assert out.count() > 0  # k clamped to corpus size instead of throwing
 
@@ -138,6 +127,54 @@ def test_ivf_indexed_prunes_and_full_probe_is_exact(spark, sf_dir, tmp_path):
     a = sorted((r.q_id, r.rank, r.neighbor_id, r.cosine) for r in full.collect())
     b = sorted((r.q_id, r.rank, r.neighbor_id, r.cosine) for r in brute.collect())
     assert a == b
+
+
+def test_index_centroids_read_the_part_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The centroid table paired with a cells generation lives in
+    ``_centroids``, whose leading ``_`` keeps it out of the cells scan.
+    Read as a root path, Spark's file index treats that leaf as hidden
+    (``All paths were ignored``), so the collect reads the part files:
+    no root path of the relation has a hidden leaf, and the rows equal
+    the written centroids."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from bigdataproject_spark.operators.simsearch import (
+        _collect_index_centroids,
+        ivf_write_index_from_centroids,
+        sample_centroids,
+    )
+    from bigdataproject_spark.operators.versioned import table_read_dir
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    ctrs = sample_centroids(
+        emb, id_col="vec_id", vec_col="embedding", n_centroids=8
+    )
+    idx = str(tmp_path / "ivf_index")
+    ivf_write_index_from_centroids(
+        emb, idx, ctrs, id_col="vec_id", vec_col="embedding"
+    )
+    cells = table_read_dir(spark, idx, "cells")
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        df = real(self, *paths, **kw)
+        reads.append(df)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    got = _collect_index_centroids(spark, idx, cells)
+    monkeypatch.undo()
+
+    assert got == sorted(ctrs)
+    (df,) = reads
+    roots = df._jdf.queryExecution().analyzed().relation().location().rootPaths()
+    leaves = [roots.apply(i).getName() for i in range(roots.length())]
+    assert leaves
+    assert not [n for n in leaves if n.startswith(("_", "."))]
 
 
 def test_ivf_write_index_empty_corpus_raises(spark, sf_dir, tmp_path):

@@ -2,8 +2,11 @@
 plain-Python references computed with hashlib — the property that makes the
 minhash-LSH and simhash registry queries cross-engine hash-checkable.
 
-The fast engine-specific families (xxhash64/murmur3) are covered by
-tests/test_dedup_simsearch.py; these tests pin the portable variants'
+MinHash has one member family, ``(A_i·(sh mod P) + B_i) mod P``; only the
+shingle kernel differs (portable md5 shingles, xxhash64 shingles, or
+string shingles hashed to a long first), and all three are pinned to the
+brute-force Jaccard pairs here. The xxhash64 SimHash family is covered
+by tests/test_dedup_simsearch.py; these tests pin the portable variants'
 arithmetic so a refactor can't silently diverge from the DuckDB oracles
 (which share the same generator, bigdataproject_spark.operators.dedup).
 """
@@ -101,7 +104,6 @@ def test_minhash_md5_band_keys_match_python_reference(docs_df):
     sh_map = {r["id"]: r["sh"] for r in sh_docs.collect()}
     rows = lsh_band_rows(
         sh_docs, id_col="id", shingles_col="sh", num_hashes=8, bands=2,
-        hash_family="md5",
     ).collect()
     assert rows, "non-empty docs must emit band rows"
     for r in rows:
@@ -125,20 +127,21 @@ def test_minhash_md5_pipeline_verifies_jaccard(docs_df):
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in minhash_lsh_dedup_pairs(
             sh_docs, id_col="id", shingles_col="sh", threshold=0.5,
-            num_hashes=32, bands=8, hash_family="md5",
+            num_hashes=32, bands=8,
         ).collect()
     }
     assert pairs[(1, 5)] == 1.0
     assert all(j >= 0.5 for j in pairs.values())
 
 
-def test_hash_families_find_the_same_verified_pairs(spark):
-    """Both MinHash paths stay (sf10-class receipt in ROADMAP direction
-    3: the portable shingle kernel costs ~4x the xxhash64 one), so pin
-    that they agree. On exact copies, one-token edits (Jaccard 27/29)
-    and unrelated docs, each path's verified pairs equal the brute-force
-    Jaccard pairs. A pair at J = 27/29 misses all 8 bands of 4 rows with
-    probability (1 - J^4)^8 < 2e-5."""
+def test_shingle_kernels_find_the_same_verified_pairs(spark):
+    """The one MinHash family serves every shingle kernel, so pin that
+    they agree. Both hashed kernels stay (sf10-class receipt in ROADMAP:
+    the portable shingle kernel costs ~4x the xxhash64 one), and string
+    shingles enter through an xxhash64 base. On exact copies, one-token
+    edits (Jaccard 27/29) and unrelated docs, each kernel's verified
+    pairs equal the brute-force Jaccard pairs. A pair at J = 27/29
+    misses all 8 bands of 4 rows with probability (1 - J^4)^8 < 2e-5."""
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(50)]
     rows = []
@@ -160,19 +163,15 @@ def test_hash_families_find_the_same_verified_pairs(spark):
         if len(sa & sb) / len(sa | sb) >= 0.8:
             expect[(a, b)] = len(sa & sb) / len(sa | sb)
     assert len(expect) == 36  # 3 pairs per base doc
-    for kernel, family in (
-        (hashed_word_shingles, "murmur3"),
-        (portable_hashed_shingles, "md5"),
-    ):
+    for kernel in (hashed_word_shingles, portable_hashed_shingles, word_shingles):
         sh = df.select("id", kernel("tokens", 3).alias("sh"))
         got = {
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in minhash_lsh_dedup_pairs(
                 sh, id_col="id", shingles_col="sh", threshold=0.8,
-                hash_family=family,
             ).collect()
         }
-        assert got == pytest.approx(expect), family
+        assert got == pytest.approx(expect), kernel.__name__
 
 
 def test_minhash_coefficients_deterministic_and_in_field():

@@ -382,8 +382,8 @@ def test_compaction_sweeps_late_band_appends(spark, tmp_path, monkeypatch):
             # live dir AFTER the snapshot was taken
             live = table_read_dir(spark_, path_, "bands")
             late = spark.createDataFrame(
-                [(999, b, 123456789) for b in range(8)],
-                "id long, band_id int, band_hash bigint",
+                [(999, b, "1|2|3|4") for b in range(8)],
+                "id long, band_id int, band_hash string",
             )
             late.coalesce(1).write.mode("append").parquet(live)
         return real_tot(spark_, path_, table_, **kw)
