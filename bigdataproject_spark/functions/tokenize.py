@@ -251,15 +251,6 @@ def get_tokenizer(
     )
 
 
-def token_count_expr(text: Column | str, *, tokenizer=None) -> Column:
-    """int token count of ``text`` under any seam tokenizer (default:
-    the raw regex backend). ``F.size`` of the token array — whatever
-    produced the array, the count math is the same; this is the column
-    pack budgets and quality stats should share."""
-    tok = tokenizer or get_tokenizer("regex")
-    return F.size(tok(text))
-
-
 def jieba_tokenize_udf(
     *,
     stopwords: Sequence[str] = (),

@@ -17,8 +17,8 @@ Scale design:
     min-aggregates over exploded shingle postings, banded into b
     buckets; candidate pairs join only within (band, band key).
     Verification re-checks exact Jaccard on candidates only.
-  * SimHash: 64-bit fingerprint via xxhash64 bit-vote aggregation entirely
-    in array expressions; near-dups = equal fingerprint (or banded hamming).
+  * SimHash: 60-bit portable md5 fingerprint via flat bit-vote
+    aggregates; near-dups = pigeonhole-banded hamming join.
 """
 
 from __future__ import annotations
@@ -64,30 +64,17 @@ def release_dedup_caches(spark) -> int:
 # --- shingling ----------------------------------------------------------------
 
 
-def word_shingles(tokens: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a token array (space-joined).
-
-    Built as a chain of n−1 ``zip_with`` concats over n array slices —
-    one array copy per slice — instead of a per-index ``slice`` inside
-    ``transform`` (which copies a k-window per element). Higher-order
-    functions evaluate interpreted, so this constant factor is real:
-    measured 4.9 s → 3.7 s for 50k docs (same distinct sets,
-    equivalence-tested). Short docs (< n tokens) and NULL token arrays
-    yield []. NULL token ELEMENTS are filtered out before windowing
-    (``concat`` inside zip_with would otherwise null the whole shingle,
-    whereas the pre-rewrite ``concat_ws`` skipped them — the filter
-    restores skip semantics; no current tokenizer emits NULL tokens)."""
+def _without_null_tokens(tokens: Column | str, kernel) -> Column:
+    """``kernel`` applied to the token array with its NULL elements
+    dropped, so a NULL token never enters (or splits) a window. The
+    filtered array is let-bound — ``transform(array(x), a -> kernel(a))``
+    evaluates x once per row — because the kernels reference their
+    input several times and an inline filter is re-evaluated per
+    reference (portable kernel over 5,000 cached token arrays, noop
+    sink, 4 cores: 0.50 s unfiltered, 0.57 s let-bound, 3.22 s
+    inline)."""
     t = F.col(tokens) if isinstance(tokens, str) else tokens
-    t = F.filter(t, lambda x: x.isNotNull())
-    m = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    z = F.slice(t, 1, m)
-    for i in range(1, n):
-        z = F.zip_with(
-            z, F.slice(t, i + 1, m), lambda x, y: F.concat(x, F.lit(" "), y)
-        )
-    # coalesce: NULL input (size = -1 → NULL slice) must keep yielding
-    # [], as the pre-zip_with implementation did.
-    return F.array_distinct(F.coalesce(z, F.array().cast("array<string>")))
+    return F.transform(F.array(F.filter(t, lambda x: x.isNotNull())), kernel)[0]
 
 
 def hashed_word_shingles(tokens: Column | str, n: int = 3) -> Column:
@@ -98,15 +85,19 @@ def hashed_word_shingles(tokens: Column | str, n: int = 3) -> Column:
     shingle, and downstream set ops (array_intersect for Jaccard verify)
     run on longs. Jaccard over hashed shingles equals Jaccard over string
     shingles up to 2^-64-probability collisions — the standard trade for
-    minhash pipelines at scale (use :func:`word_shingles` where exact
-    string semantics or a SQL oracle is required)."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(-1)))
-    sh = F.transform(
-        idx,
-        lambda i: F.xxhash64(*[F.element_at(t, i + j + 1) for j in range(n)]),
-    )
-    return F.array_distinct(F.when(F.size(t) >= n, sh).otherwise(F.array()))
+    minhash pipelines at scale (use :func:`portable_hashed_shingles` where
+    a SQL oracle is required). NULL token elements are dropped before
+    windowing; a NULL token array yields []."""
+
+    def kernel(t: Column) -> Column:
+        idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(-1)))
+        sh = F.transform(
+            idx,
+            lambda i: F.xxhash64(*[F.element_at(t, i + j + 1) for j in range(n)]),
+        )
+        return F.array_distinct(F.when(F.size(t) >= n, sh).otherwise(F.array()))
+
+    return _without_null_tokens(tokens, kernel)
 
 
 # --- exact dedup --------------------------------------------------------------
@@ -176,8 +167,6 @@ def _pairwise_jaccard(
       candidate pair on the full shingle arrays (persisted once, three
       consumers), never a per-shingle aggregation.
     """
-    from pyspark import StorageLevel
-
     # p = sz - ceil(t*sz) + 1; the 1e-9 nudge keeps float noise from
     # rounding ceil UP (a too-short prefix would lose pairs; too long is
     # merely conservative). threshold=0 degenerates to the full array.
@@ -279,8 +268,6 @@ def jaccard_pairs(
     chain per reference (measured 6× = 60s vs 10s at 10× scale — the
     same re-evaluation trap documented for winnowing and textstats).
     """
-    from pyspark import StorageLevel
-
     base_sh = df.select(
         F.col(id_col).alias("id"), F.col(shingles_col).alias("sh")
     ).transform(_persist_tracked)
@@ -356,8 +343,6 @@ def collapse_identical_pairs(
     ALL of the cluster's pairs — while the collapsed path counts df per
     distinct set and emits the intra-cluster pairs from ``self_vals``.
     """
-    from pyspark import StorageLevel
-
     if not force_collapse:
         # Gate stats in ONE partial-aggregable pass over the caller's
         # already-persisted base — no second wide cache just to decide
@@ -484,28 +469,32 @@ def portable_hashed_shingles(tokens: Column | str, n: int = 3) -> Column:
     signatures) stay exactly comparable cross-engine.
 
     r13 kernel: ONE interpreted pass — ``transform(sequence)`` hashing
-    ``concat_ws`` of the k window tokens directly — instead of the
-    :func:`word_shingles` zip_with chain (n−1 interpreted array passes
-    building shingle strings) followed by a transform hash pass. sf10
-    CPU receipt: 72–78 → 57.5–64.6 CPU-s for the shingle projection,
-    output arrays EXACTLY equal (distinct-on-hash ≡
+    ``concat_ws`` of the k window tokens directly — instead of a
+    ``zip_with`` chain (n−1 interpreted array passes building shingle
+    strings) followed by a transform hash pass. sf10 CPU receipt:
+    72–78 → 57.5–64.6 CPU-s for the shingle projection, output arrays
+    EXACTLY equal (distinct-on-hash ≡
     distinct-on-string-then-hash-then-distinct, position order
     preserved by both). md5 itself dominates what remains — that cost
     is the portability contract. The fuller posting-stream restructure
     (Generate-based build, no arrays — r12 measured its ceiling) stays
     deferred: the array interface is load-bearing for the collapse
-    gate and the intersect verify."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(-1)))
-    sh = F.transform(
-        idx,
-        lambda i: portable_hash48(
-            F.concat_ws(" ", *[F.element_at(t, i + j + 1) for j in range(n)])
-        ),
-    )
-    return F.array_distinct(
-        F.when(F.size(t) >= n, sh).otherwise(F.array().cast("array<bigint>"))
-    )
+    gate and the intersect verify. NULL token elements are dropped
+    before windowing, as in :func:`hashed_word_shingles`."""
+
+    def kernel(t: Column) -> Column:
+        idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(-1)))
+        sh = F.transform(
+            idx,
+            lambda i: portable_hash48(
+                F.concat_ws(" ", *[F.element_at(t, i + j + 1) for j in range(n)])
+            ),
+        )
+        return F.array_distinct(
+            F.when(F.size(t) >= n, sh).otherwise(F.array().cast("array<bigint>"))
+        )
+
+    return _without_null_tokens(tokens, kernel)
 
 
 def lsh_band_rows(
@@ -680,127 +669,51 @@ def minhash_lsh_dedup_pairs(
 # --- SimHash ------------------------------------------------------------------
 
 
-def _assemble_fp(n_bits: int, vote) -> Column:
-    """bitwiseOR-fold per-bit sign votes into ONE bigint fingerprint.
-    ``vote(b)`` returns the (int) vote column for bit b. The subtle
-    1 << 63 two's-complement wrap (bit 63 must land in the long's sign
-    bit) lives here and only here — simhash64 and simhash_table must
-    produce identical fingerprints by construction, not by keeping two
-    copies of this loop in sync."""
-    fp = F.lit(0).cast("bigint")
-    for b in range(n_bits):
-        bit_val = 1 << b
-        if bit_val >= 1 << 63:
-            bit_val -= 1 << 64
-        fp = fp.bitwiseOR(
-            F.when(vote(b) > 0, F.lit(bit_val).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return fp
+# The SimHash fingerprint width: 15 md5 hex chars. Below 2^60 there is
+# no sign-bit wraparound on either engine.
+SIMHASH_BITS = 60
 
 
-def simhash64(tokens: Column | str) -> Column:
-    """64-bit SimHash of a token array, fully in array expressions.
+def simhash_table(df: DataFrame, *, id_col: str, tokens: Column | str) -> DataFrame:
+    """(id, fp): 60-bit SimHash per row via explode + flat sum aggregates.
 
-    Per token: xxhash64 → 64 sign votes (+1 if bit set else −1); votes are
-    summed with a zip_with fold over an array<int> accumulator; fingerprint
-    bit b = (vote_b > 0). Result as bigint (bit 63 lands in the sign bit —
-    compare for equality, don't order)."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    zero = F.array(*[F.lit(0) for _ in range(64)])
-    votes = F.aggregate(
-        t,
-        zero,
-        lambda acc, tok: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (
-                        F.shiftright(F.xxhash64(tok), b).bitwiseAND(F.lit(1)) * 2 - 1
-                    ).cast("int")
-                    for b in range(64)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    return _assemble_fp(64, lambda b: F.element_at(votes, b + 1))
-
-
-def simhash_table(
-    df: DataFrame, *, id_col: str, tokens: Column | str, hash_fn: str = "xxhash64"
-) -> DataFrame:
-    """(id, fp): SimHash per row via explode + flat sum aggregates.
-
-    Same fingerprint as :func:`simhash64` (for the default family),
-    different physical shape: one hash per token, bit votes as flat
-    ``sum(sign)`` aggregates (map-side combined, whole-stage codegen)
-    instead of a per-token zip_with fold allocating an array per step —
-    ~4× on 10×-scale data. Zero-token rows keep the empty-input
-    fingerprint (all votes 0 → fp 0), matching simhash64 on [].
-
-    ``hash_fn='xxhash64'`` (default): 64 bits from the JVM xxhash64 —
-    the fast scale path (engine-specific → not SQL-oracle'd).
-    ``hash_fn='md5'``: 60 bits parsed from the first 15 md5 hex chars as
-    ONE integer (bit b = bit b of that integer) — md5/substr/hex-parse
-    exist verbatim in DuckDB, so the fingerprint (and the banded
-    near-dup join on it) is cross-engine hash-checkable. 60 bits keeps
-    the fingerprint strictly below 2^60: no sign-bit wraparound on
-    either engine.
+    Per token, the first 15 md5 hex chars parsed as ONE integer h; bit b
+    of the fingerprint is set iff more tokens have bit b of h set than
+    unset. md5/substr/hex-parse exist verbatim in DuckDB, so the
+    fingerprint (and the banded near-dup join on it) is cross-engine
+    hash-checkable. Bit votes are flat ``sum(sign)`` aggregates
+    (map-side combined, whole-stage codegen). Zero-token rows keep the
+    empty-input fingerprint (all votes 0 → fp 0).
     """
-    if hash_fn == "xxhash64":
-        n_bits = 64
-        hashed = df.select(
-            F.col(id_col).alias("id"),
-            F.explode_outer(
-                F.col(tokens) if isinstance(tokens, str) else tokens
-            ).alias("tok"),
-        ).select(
-            "id",
-            # xxhash64(NULL) returns the SEED (42), not NULL — guard on the
-            # token so empty-array rows (explode_outer's null) vote zero.
-            F.when(F.col("tok").isNotNull(), F.xxhash64("tok")).alias("h"),
-        )
-
-        def _bit(b: int) -> Column:
-            return F.shiftright("h", b).bitwiseAND(F.lit(1))
-
-    elif hash_fn == "md5":
-        n_bits = 60
-        # One md5 + one hex-parse per token; the 60 vote aggregates then
-        # read bits of a single bigint column. md5(NULL) is NULL (unlike
-        # xxhash64's return-the-seed), so the null guard needs no extra
-        # marker column.
-        hashed = df.select(
-            F.col(id_col).alias("id"),
-            F.explode_outer(
-                F.col(tokens) if isinstance(tokens, str) else tokens
-            ).alias("tok"),
-        ).select(
-            "id",
-            F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
-
-        def _bit(b: int) -> Column:
-            return F.shiftright("h", b).bitwiseAND(F.lit(1)).cast("int")
-
-    else:  # pragma: no cover - guarded upstream
-        raise ValueError(f"unsupported hash_fn {hash_fn!r}")
-
+    # md5(NULL) is NULL, so the empty-array row that explode_outer emits
+    # votes zero on every bit.
+    hashed = df.select(
+        F.col(id_col).alias("id"),
+        F.explode_outer(
+            F.col(tokens) if isinstance(tokens, str) else tokens
+        ).alias("tok"),
+    ).select(
+        "id",
+        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint").alias("h"),
+    )
     votes = hashed.groupBy("id").agg(
         *[
             F.sum(
-                F.when(F.col("h").isNull(), F.lit(0)).otherwise(_bit(b) * 2 - 1)
+                F.when(F.col("h").isNull(), F.lit(0)).otherwise(
+                    F.shiftright("h", b).bitwiseAND(F.lit(1)).cast("int") * 2 - 1
+                )
             ).alias(f"v{b}")
-            for b in range(n_bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
-    return votes.select(
-        "id", _assemble_fp(n_bits, lambda b: F.col(f"v{b}")).alias("fp")
-    )
+    fp = F.lit(0).cast("bigint")
+    for b in range(SIMHASH_BITS):
+        fp = fp.bitwiseOR(
+            F.when(F.col(f"v{b}") > 0, F.lit(1 << b).cast("bigint")).otherwise(
+                F.lit(0).cast("bigint")
+            )
+        )
+    return votes.select("id", fp.alias("fp"))
 
 
 def simhash_neardup_pairs(
@@ -810,25 +723,32 @@ def simhash_neardup_pairs(
     tokens: Column | str,
     max_hamming: int = 3,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) <= max_hamming.
 
-    Pigeonhole banding (the classic simhash index): with the fingerprint
-    (64-bit xxhash64 family, 60-bit md5 family — see
-    :func:`simhash_table`) split into ``bands`` equal bit-bands and
-    ``max_hamming < bands``, any qualifying pair agrees EXACTLY on at
-    least one band — so candidates come from a (band_id, band_bits)
-    equi-join (recall 1.0, no theta join), then the exact hamming
-    distance (``bit_count(a XOR b)``) verifies. Returns
-    (id_a, id_b, hamming) with id_a < id_b.
+    Pigeonhole banding (the classic simhash index): with the 60-bit
+    fingerprint (:func:`simhash_table`) split into ``bands`` equal
+    bit-bands and ``max_hamming < bands``, any qualifying pair agrees
+    EXACTLY on at least one band — so candidates come from a
+    (band_id, band_bits) equi-join (recall 1.0, no theta join), then the
+    exact hamming distance (``bit_count(a XOR b)``) verifies. Returns
+    (id_a, id_b, hamming) with id_a < id_b. ``bands`` must divide 60.
 
     Runs behind :func:`collapse_identical_pairs`: the fingerprint depends
     only on the token multiset, so exact copies collapse to one
     representative before the band join and expand afterwards (identical
     multiset → identical fp → hamming 0), output-identically."""
-    from pyspark import StorageLevel
-
+    if bands < 1 or SIMHASH_BITS % bands:
+        valid = [d for d in range(1, SIMHASH_BITS + 1) if SIMHASH_BITS % d == 0]
+        raise ValueError(
+            f"bands must divide the {SIMHASH_BITS}-bit fingerprint: one of "
+            f"{valid}, got {bands}"
+        )
+    if max_hamming >= bands:
+        raise ValueError(
+            f"max_hamming must be below bands for pigeonhole recall, got "
+            f"max_hamming={max_hamming}, bands={bands}"
+        )
     base = df.select(
         F.col(id_col).alias("id"),
         (F.col(tokens) if isinstance(tokens, str) else tokens).alias("obj"),
@@ -836,22 +756,18 @@ def simhash_neardup_pairs(
     return collapse_identical_pairs(
         base,
         pair_fn=lambda rep: _simhash_band_pairs(
-            rep, max_hamming=max_hamming, bands=bands, hash_fn=hash_fn
+            rep, max_hamming=max_hamming, bands=bands
         ),
         self_vals={"hamming": F.lit(0)},
     )
 
 
-def _simhash_band_pairs(
-    rep: DataFrame, *, max_hamming: int, bands: int, hash_fn: str
-) -> DataFrame:
+def _simhash_band_pairs(rep: DataFrame, *, max_hamming: int, bands: int) -> DataFrame:
     """Pigeonhole band join + exact hamming verify over an (id, obj=tokens)
     representative frame — see :func:`simhash_neardup_pairs`."""
-    n_bits = 64 if hash_fn == "xxhash64" else 60
-    assert n_bits % bands == 0 and max_hamming < bands
-    width = n_bits // bands
+    width = SIMHASH_BITS // bands
     mask = (1 << width) - 1
-    fp = simhash_table(rep, id_col="id", tokens="obj", hash_fn=hash_fn)
+    fp = simhash_table(rep, id_col="id", tokens="obj")
     band_rows = fp.select(
         "id",
         "fp",

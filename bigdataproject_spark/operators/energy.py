@@ -191,27 +191,6 @@ def flag_top_pct_binned(
     )
 
 
-def energy_pipeline(
-    events: DataFrame,
-    *,
-    key: str,
-    time_col: str,
-    weight: Column,
-    media_time: bool = True,
-    window_s: int = WINDOW_SIZE_S,
-    exact: bool = True,
-) -> DataFrame:
-    """Full per-bucket energy + highlight flag, columns:
-    key, bucket, density, sentiment, energy, rank_pct?, is_high."""
-    bucket = (
-        bucket_media_time(time_col, window_s)
-        if media_time
-        else bucket_event_time(time_col, window_s)
-    )
-    agg = bucket_energy(events, key=key, bucket=bucket, weight=weight)
-    return flag_top_pct(agg) if exact else flag_top_pct_approx(agg)
-
-
 def timeline(
     df: DataFrame,
     *,

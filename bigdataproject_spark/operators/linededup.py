@@ -24,7 +24,8 @@ guaranteed at 100 TB). AQE cannot rescue it: by the time runtime stats
 exist, the corpus-side shuffle write has happened. So ``dedup_lines``
 localCheckpoints the hot set (its aggregation runs exactly once either
 way; the checkpoint stores the output instead of re-deriving it),
-MEASURES its bytes with one aggregate over the stored rows — the
+MEASURES its bytes as an ``Observation`` on that same checkpoint job
+(``spandedup._measured_broadcast``, the span guards' protocol) — the
 per-row width derived from the caller's actual id type, since a
 string/wide doc id must not ride a long-sized estimate into a pinned
 broadcast (r7, was a fixed 40B/row) — and broadcast-hints the join
@@ -61,6 +62,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdataproject_spark.operators import spandedup
+
 
 def _lines(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(
@@ -94,52 +97,6 @@ def _hot_stats(
     )
 
 
-def hot_lines(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
-    """(line_key, n_occurrences) for normalized lines appearing at least
-    ``min_count`` times corpus-wide — the audit view (join a sample of
-    line text back for human review)."""
-    return _hot_stats(
-        docs, id_col=id_col, text_col=text_col, min_count=min_count
-    ).select(
-        F.col("_key").alias("line_key"), F.col("_n").alias("n_occurrences")
-    )
-
-
-def _hot_set_bytes(hot: DataFrame, id_type) -> int:
-    """Measured byte size of the (already localCheckpoint'd) hot set:
-    ONE aggregate over its stored blocks summing a per-row width
-    expression. The fixed part — 8B null bitmap + 8B _key + 8B struct
-    pointer/size word + struct payload (8B bitmap + 8B-padded _pos) —
-    is exact for unsafe rows; the ``_first._id`` term depends on the
-    CALLER'S id column type (``dedup_lines`` accepts any id_col), so it
-    is derived from the actual data type — fixed-width types count 8B,
-    string/binary ids count their measured per-row UTF-8/raw BYTE
-    length via ``octet_length`` (NOT ``length``: that counts
-    characters, and UnsafeRow stores UTF-8 — a CJK doc id is 3 bytes
-    per char, so a chars×2 estimate understates it; a wide doc id must
-    not ride an under-sized estimate into a pinned broadcast), rounded
-    up to UnsafeRow's 8-byte alignment plus the 8B offset/length slot.
-    A 2x safety factor against JVM object overhead is applied by the
-    caller."""
-    from pyspark.sql.types import BinaryType, StringType
-
-    base = F.lit(40).cast("long")
-    idc = F.col("_first._id")
-    if isinstance(id_type, (StringType, BinaryType)):
-        b = F.coalesce(F.octet_length(idc), F.lit(0)).cast("long")
-        term = F.shiftleft(F.shiftright(b + F.lit(7), 3), 3) + F.lit(8)
-    else:  # fixed-width numeric/date/timestamp: 8B padded slot
-        term = F.lit(8).cast("long")
-    row = hot.agg(F.sum(base + term).alias("b")).collect()[0]
-    return int(row["b"] or 0)
-
-
 def dedup_lines(
     docs: DataFrame,
     *,
@@ -162,16 +119,18 @@ def dedup_lines(
     hot = _hot_stats(
         docs, id_col=id_col, text_col=text_col, min_count=min_count
     ).select("_key", "_first")
-    if hot_broadcast_max_bytes > 0:
-        # eager: one job computes the hot aggregation (which every plan
-        # below needs anyway) and stores its output blocks; the size
-        # measurement scans those blocks, it does not re-explode the
-        # corpus. Width is MEASURED per the actual id type (string doc
-        # ids are not 8 bytes — see _hot_set_bytes).
-        hot = hot.localCheckpoint()
-        measured = _hot_set_bytes(hot, docs.schema[id_col].dataType)
-        if measured * 2 <= hot_broadcast_max_bytes:
-            hot = F.broadcast(hot)
+    # The width of one hot row: 8B null bitmap + 8B _key + 8B struct
+    # offset/size word + the struct's 8B bitmap and 8B _pos = 40B, plus
+    # the _first._id slot sized from the caller's id type (a string id
+    # counts its UTF-8 bytes).
+    hot = spandedup._measured_broadcast(
+        hot,
+        F.lit(40)
+        + spandedup._unsafe_row_slot(
+            F.col("_first._id"), docs.schema[id_col].dataType
+        ),
+        hot_broadcast_max_bytes,
+    )
 
     marked = lines.join(hot, "_key", "left")
     if keep_first:

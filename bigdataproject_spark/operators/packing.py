@@ -91,13 +91,3 @@ def pack_sequences(
         .withColumn("pack_cum_tokens", F.sum(tokens_col).over(wp_rows))
     )
 
-
-def pack_stats(
-    packed: DataFrame, *, shard_col: str, tokens_col: str = "n_tokens"
-) -> DataFrame:
-    """(shard, pack_id, n_chunks, pack_tokens) — audit view for fill
-    ratio (mean(pack_tokens)/target is the packing efficiency)."""
-    return packed.groupBy(shard_col, "pack_id").agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum(tokens_col).alias("pack_tokens"),
-    )

@@ -63,11 +63,7 @@ def _gram_key(gram, hash_family: str):
         return F.md5(gram)
     if hash_family == "xxhash64":
         return F.xxhash64(gram)
-    if hash_family == "raw":
-        return gram
-    raise ValueError(
-        f"unknown hash_family {hash_family!r} (md5 | xxhash64 | raw)"
-    )
+    raise ValueError(f"unknown hash_family {hash_family!r} (md5 | xxhash64)")
 
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -277,7 +273,7 @@ def duplicate_gram_hits(
         # matches anything — the scrub would silently return the text
         # uncut. Two structural guards: the config metadata stamped by
         # reference_gram_keys (catches EVERY mismatch, including same-
-        # dtype ones like k=8 vs k=10 or raw vs md5), and the key dtype
+        # dtype ones like k=8 vs k=10), and the key dtype
         # as a fallback for hand-built frames without metadata.
         meta = reference_keys.schema["key"].metadata or {}
         if meta.get("k") is not None or meta.get("hash_family") is not None:

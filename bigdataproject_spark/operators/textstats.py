@@ -242,22 +242,22 @@ def fingerprint_expr(tokens: Column | str, head: int = 64) -> Column:
 
 
 def winnowing_fingerprints(
-    tokens: Column | str, *, k: int = 5, window: int = 4, hash_fn: str = "xxhash64"
+    tokens: Column | str, *, k: int = 5, window: int = 4
 ) -> Column:
     """Winnowing fingerprint set (Schleimer et al., SIGMOD'03): k-gram
     hashes, min per sliding window, distinct mins — robust partial-overlap
     detection.
 
-    ``hash_fn='xxhash64'`` (default): JVM 64-bit hash, the fast scale
-    path, engine-specific → not SQL-oracle'd. ``hash_fn='md5'``: portable
-    48-bit values (first 12 hex chars of md5, parsed — the
-    ``dedup.portable_hash48`` family), computable verbatim in DuckDB so
-    this variant is cross-engine hash-checkable. Both paths produce
+    K-gram hashes are portable 48-bit values (first 12 hex chars of md5,
+    parsed — ``dedup.portable_hash48``), computable verbatim in DuckDB,
+    so the fingerprint set is cross-engine hash-checkable. The result is
     array<bigint>: numeric window-mins over 8-byte cells replaced the
     earlier lexicographic mins over 32-char hex strings (measured 23.7 s
     → 9 s for the oracled query at 50k docs). K-grams are built with a
     zip_with concat chain over k slices, not a per-index ``slice`` copy
-    (HOFs evaluate interpreted; see ``dedup.word_shingles``)."""
+    (HOFs evaluate interpreted, so each array copy costs)."""
+    from bigdataproject_spark.operators.dedup import portable_hash48
+
     t = F.col(tokens) if isinstance(tokens, str) else tokens
     m = F.greatest(F.size(t) - (k - 1), F.lit(0))
     kg_strings = F.slice(t, 1, m)
@@ -267,14 +267,7 @@ def winnowing_fingerprints(
             F.slice(t, i + 1, m),
             lambda x, y: F.concat(x, F.lit(" "), y),
         )
-    if hash_fn == "xxhash64":
-        kgram_hashes = F.transform(kg_strings, lambda s: F.xxhash64(s))
-    elif hash_fn == "md5":
-        from bigdataproject_spark.operators.dedup import portable_hash48
-
-        kgram_hashes = F.transform(kg_strings, portable_hash48)
-    else:  # pragma: no cover - guarded upstream
-        raise ValueError(f"unsupported hash_fn {hash_fn!r}")
+    kgram_hashes = F.transform(kg_strings, portable_hash48)
     empty_t = "array<bigint>"
 
     # Let-bind the kgram hash array: referencing the raw expression from

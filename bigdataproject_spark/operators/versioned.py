@@ -67,6 +67,7 @@ from bigdataproject_spark.operators.lease import read_tiny_file
 __all__ = [
     "TableMissingError",
     "complete_versions",
+    "n_live_files",
     "n_parquet_files",
     "touch",
     "pair_versions",
@@ -93,7 +94,7 @@ def touch(spark, filepath: str) -> None:
     """Create (or truncate) an empty marker file — completeness
     markers, phase-commit markers; the one shared implementation
     (previously duplicated in simsearch/_touch_success and
-    index_stream/_touch)."""
+    index_stream)."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(filepath)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -129,6 +130,18 @@ def n_parquet_files(spark, dirpath: str) -> int:
             continue
         n += 1
     return n
+
+
+def n_live_files(spark, path: str, table: str) -> int:
+    """Part-file count of ``table``'s CURRENT generation under the index
+    root ``path``, 0 when the table does not exist yet. The superseded
+    generation stays on disk for one grace cycle; counting it too would
+    double the number and trip a file-count compaction trigger every
+    batch."""
+    try:
+        return n_parquet_files(spark, table_read_dir(spark, path, table))
+    except TableMissingError:
+        return 0
 
 
 def _pointer_path(path: str, table: str) -> str:

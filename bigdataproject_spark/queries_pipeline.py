@@ -237,16 +237,13 @@ def q_dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying pair agrees exactly on one of 4 bit-bands — equi-join
     candidates at recall 1.0, bit_count verify).
 
-    Uses the PORTABLE 60-bit md5 fingerprint (one hex parse per token)
-    so the DuckDB oracle reproduces fingerprints, bands, and hamming
-    distances bit-for-bit
-    (hash-checked). The 64-bit xxhash64 family stays the default fast
-    path of ``simhash_neardup_pairs`` (unit-tested); the physical shape
-    — explode→flat sum votes, banded equi-join — is identical."""
+    The fingerprint is the operator's one family, 60 bits parsed from
+    md5 (one hex parse per token), so the DuckDB oracle reproduces
+    fingerprints, bands, and hamming distances bit-for-bit
+    (hash-checked)."""
     docs = _docs_tokens(spark, sf_dir, fan=True)
     return simhash_neardup_pairs(
-        docs, id_col="doc_id", tokens="tokens", max_hamming=3, bands=4,
-        hash_fn="md5",
+        docs, id_col="doc_id", tokens="tokens", max_hamming=3, bands=4
     )
 
 
@@ -798,9 +795,9 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix fingerprint (md5 of first 64 normalized tokens) + winnowing
     fingerprint set (k-gram min-hash windows).
 
-    Hash-checked: uses the portable-48-bit md5 winnowing variant — the
-    k-gram digests and their numeric window minima reproduce identically
-    in DuckDB, unlike the default xxhash64 scale path. The fingerprint
+    Hash-checked: winnowing hashes k-grams to portable 48-bit md5
+    values, so the digests and their numeric window minima reproduce
+    identically in DuckDB. The fingerprint
     set is emitted sorted and '|'-joined (driver canonicalizer can't
     sort list cells). The winnowing expression is bound to a NAMED
     inner-projection column: referencing the raw expression from both
@@ -811,7 +808,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     heaviest interpreted map pass in the registry — never serialize it
     onto one core for a small source (identity at scale)."""
     docs = _docs_tokens(spark, sf_dir, fan=True)
-    fps = winnowing_fingerprints("tokens", k=5, window=4, hash_fn="md5")
+    fps = winnowing_fingerprints("tokens", k=5, window=4)
     inner = docs.select(
         "doc_id",
         fingerprint_expr("tokens", 64).alias("fp_prefix64"),

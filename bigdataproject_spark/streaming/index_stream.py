@@ -43,6 +43,7 @@ from bigdataproject_spark.operators.dedup_index import (
     incremental_minhash_pairs,
     write_minhash_index,
 )
+from bigdataproject_spark.operators.versioned import n_live_files, touch
 
 __all__ = ["ensure_index", "make_index_batch_writer", "stream_dedup_to_index"]
 
@@ -59,31 +60,6 @@ def _exists(spark: SparkSession, path: str) -> bool:
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def _touch(spark: SparkSession, path: str) -> None:
-    from bigdataproject_spark.operators.versioned import touch
-
-    touch(spark, path)
-
-
-def _n_band_files(spark: SparkSession, index_path: str) -> int:
-    """Part-file count of the CURRENT bands generation (the versioned
-    layout keeps the superseded generation for one grace cycle;
-    counting it too would trip ``compact_min_band_files`` every
-    batch)."""
-    from bigdataproject_spark.operators.versioned import (
-        TableMissingError,
-        n_parquet_files,
-        table_read_dir,
-    )
-
-    try:
-        return n_parquet_files(
-            spark, table_read_dir(spark, index_path, "bands")
-        )
-    except TableMissingError:
-        return 0
 
 
 def ensure_index(
@@ -214,7 +190,7 @@ def make_index_batch_writer(
                 shingles_col
             )
             survivors.write.mode("overwrite").parquet(out_dir)
-            _touch(spark, f"{out_dir}/{_LEDGER_MARKER}")
+            touch(spark, f"{out_dir}/{_LEDGER_MARKER}")
 
         # phase 2 — append exactly the ledger survivors the store does
         # not know yet (replay-safe by construction). The id set is
@@ -302,7 +278,8 @@ def make_index_batch_writer(
             and (batch_id + 1) % compact_every_n_batches == 0
         ) or (
             compact_min_band_files is not None
-            and _n_band_files(spark, index_path) >= compact_min_band_files
+            and n_live_files(spark, index_path, "bands")
+            >= compact_min_band_files
         )
         if due:
             compact_index(spark, index_path, lease_owner=lease_owner)

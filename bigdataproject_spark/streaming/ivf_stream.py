@@ -69,31 +69,15 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from bigdataproject_spark.operators.simsearch import (
     ivf_append_index,
     ivf_compact_index,
 )
+from bigdataproject_spark.operators.versioned import n_live_files
 
 __all__ = ["make_ivf_batch_writer", "stream_embeddings_to_ivf"]
-
-
-def _n_cell_files(spark: SparkSession, path: str) -> int:
-    """Part-file count of the CURRENT cells generation (the versioned
-    layout keeps the superseded generation on disk for one grace cycle
-    — counting it too would double the number and trip the
-    ``compact_min_cell_files`` trigger every batch)."""
-    from bigdataproject_spark.operators.versioned import (
-        TableMissingError,
-        n_parquet_files,
-        table_read_dir,
-    )
-
-    try:
-        return n_parquet_files(spark, table_read_dir(spark, path, "cells"))
-    except TableMissingError:
-        return 0
 
 
 def make_ivf_batch_writer(
@@ -135,7 +119,8 @@ def make_ivf_batch_writer(
             and (batch_id + 1) % compact_every_n_batches == 0
         ) or (
             compact_min_cell_files is not None
-            and _n_cell_files(spark, index_path) >= compact_min_cell_files
+            and n_live_files(spark, index_path, "cells")
+            >= compact_min_cell_files
         )
         if due:
             # keep_marker_ids={current batch}: inside foreachBatch of

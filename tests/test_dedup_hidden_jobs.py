@@ -101,10 +101,18 @@ def test_null_id_never_pairs_on_either_branch(spark, monkeypatch):
     df = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
         "sh", portable_hashed_shingles(F.split("text", " "), 3)
     )
-    got = {}
-    for branch, ratio in (("collapse", -1.0), ("direct", 2.0)):
+    got, keyed = {}, {}
+    # the gate takes the direct path when d >= ratio * n
+    for branch, ratio in (("direct", -1.0), ("collapse", 2.0)):
         monkeypatch.setattr(dedup, "COLLAPSE_DISTINCT_RATIO", ratio)
+        release_dedup_caches(spark)
         got[branch] = sorted(tuple(r) for r in _minhash(df).collect())
+        # only the collapse path caches the keyed (id, obj, k) frame
+        keyed[branch] = any(
+            f.columns == ["id", "obj", "k"]
+            for f in _DEDUP_CACHES.get(id(spark.sparkContext), [])
+        )
+    assert keyed == {"direct": False, "collapse": True}
     assert got["collapse"] == got["direct"]
     assert all(
         a is not None and b is not None and a < b for a, b, _ in got["direct"]

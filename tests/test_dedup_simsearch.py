@@ -8,15 +8,17 @@ from pyspark.sql import functions as F
 
 from bigdataproject_spark.functions.tokenize import tokenize_expr
 from bigdataproject_spark.operators.dedup import (
+    _DEDUP_CACHES,
     drop_exact_duplicates,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_lsh_dedup_pairs,
-    simhash64,
-    word_shingles,
+    release_dedup_caches,
+    simhash_table,
 )
 from bigdataproject_spark.operators.simsearch import brute_force_topk, lsh_bucket_topk
 from bigdataproject_spark.sources.readers import load_table
+from string_shingles import word_shingles
 
 
 def _toks(c):
@@ -130,7 +132,7 @@ def test_simhash_identical_tokens_equal(spark):
     df = spark.createDataFrame(
         [Row(id=1, t=["a", "b", "c"]), Row(id=2, t=["a", "b", "c"]), Row(id=3, t=["x", "y"])]
     )
-    out = {r.id: r.s for r in df.select("id", simhash64("t").alias("s")).collect()}
+    out = {r.id: r.fp for r in simhash_table(df, id_col="id", tokens="t").collect()}
     assert out[1] == out[2]
     assert out[1] != out[3]
 
@@ -180,11 +182,16 @@ def test_simhash_neardup_pairs(spark):
     out = {
         (r.id_a, r.id_b): r.hamming
         for r in simhash_neardup_pairs(
-            df, id_col="id", tokens="toks", max_hamming=16, bands=32
+            df, id_col="id", tokens="toks", max_hamming=16, bands=30
         ).collect()
     }
     assert (1, 2) in out and out[(1, 2)] <= 16
     assert (1, 3) not in out and (2, 3) not in out
+    for bands, max_hamming in ((32, 3), (0, 3), (4, 4)):
+        with pytest.raises(ValueError, match="bands"):
+            simhash_neardup_pairs(
+                df, id_col="id", tokens="toks", max_hamming=max_hamming, bands=bands
+            )
 
 
 def test_simhash_neardup_exact_duplicates(spark):
@@ -326,10 +333,18 @@ def test_collapse_branches_agree(spark, monkeypatch):
         }
         return jac, mh, sim
 
-    monkeypatch.setattr(dd, "COLLAPSE_DISTINCT_RATIO", -1.0)  # force collapse
-    collapsed = run_all()
-    monkeypatch.setattr(dd, "COLLAPSE_DISTINCT_RATIO", 2.0)  # force direct
-    direct = run_all()
+    def run_branch(ratio):
+        # the gate takes the direct path when d >= ratio * n; only the
+        # collapse path caches the keyed (id, obj, k) frame
+        monkeypatch.setattr(dd, "COLLAPSE_DISTINCT_RATIO", ratio)
+        release_dedup_caches(spark)
+        out = run_all()
+        cached = _DEDUP_CACHES.get(id(spark.sparkContext), [])
+        return out, any(f.columns == ["id", "obj", "k"] for f in cached)
+
+    direct, direct_keyed = run_branch(-1.0)  # d >= -n always: direct
+    collapsed, collapse_keyed = run_branch(2.0)  # d >= 2n never: collapse
+    assert (direct_keyed, collapse_keyed) == (False, True)
     assert collapsed == direct
     jac, _, sim = collapsed
     # non-vacuous: every 5-copy group with shingles/tokens must produce
@@ -341,28 +356,50 @@ def test_collapse_branches_agree(spark, monkeypatch):
 
 def test_word_shingles_null_tokens(spark):
     """NULL token arrays must shingle to [], not NULL (review regression:
-    the zip_with chain propagated NULL, making size() = -1 downstream)."""
+    the zip_with chain propagated NULL, making size() = -1 downstream).
+    NULL token ELEMENTS are dropped before windowing by all three
+    kernels, so they shingle the same windows: each hashed kernel's set
+    is its hash of the string shingles."""
     from pyspark.sql import Row
 
     from bigdataproject_spark.operators.dedup import (
+        hashed_word_shingles,
+        portable_hash48,
         portable_hashed_shingles,
-        word_shingles,
     )
 
     df = spark.createDataFrame(
-        [Row(i=1, tokens=None), Row(i=2, tokens=["a", "b", "c", "d"])],
+        [
+            Row(i=1, tokens=None),
+            Row(i=2, tokens=["a", "b", "c", "d"]),
+            Row(i=3, tokens=["a", None, "b", "c", "d"]),
+            Row(i=4, tokens=[None, "a", None, "b", None]),
+        ],
         "i long, tokens array<string>",
     )
+    words = word_shingles("tokens", 3)
     rows = {
-        r["i"]: (r["s"], r["h"])
+        r["i"]: r
         for r in df.select(
             "i",
-            F.size(word_shingles("tokens", 3)).alias("s"),
+            F.size(words).alias("s"),
             F.size(portable_hashed_shingles("tokens", 3)).alias("h"),
+            portable_hashed_shingles("tokens", 3).alias("p"),
+            F.transform(words, portable_hash48).alias("p_ref"),
+            hashed_word_shingles("tokens", 3).alias("x"),
+            F.transform(
+                words,
+                lambda s: F.xxhash64(*[F.split(s, " ")[j] for j in range(3)]),
+            ).alias("x_ref"),
         ).collect()
     }
-    assert rows[1] == (0, 0)
-    assert rows[2] == (2, 2)
+    assert (rows[1]["s"], rows[1]["h"]) == (0, 0)
+    assert (rows[2]["s"], rows[2]["h"]) == (2, 2)
+    assert rows[3]["s"] == 2  # windows of a b c d
+    assert rows[4]["s"] == 0  # two tokens left: no window
+    for i, r in rows.items():
+        assert sorted(r["p"]) == sorted(r["p_ref"]), i
+        assert sorted(r["x"]) == sorted(r["x_ref"]), i
 
 
 def test_embedding_blas_null_block_matches_native(spark):

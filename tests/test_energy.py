@@ -6,8 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdataproject_spark.operators.energy import (
+    bucket_energy,
+    bucket_event_time,
     bucket_media_time,
-    energy_pipeline,
     flag_top_pct,
     flag_top_pct_approx,
     flag_top_pct_binned,
@@ -20,11 +21,18 @@ def _events(spark, sf_dir):
     return load_table(spark, sf_dir, "events")
 
 
+def _energy(ev, *, exact=True):
+    """Per-bucket energy and highlight flag of the events table: event-time
+    buckets, bucket_energy, then the exact or approximate top-decile flag."""
+    agg = bucket_energy(
+        ev, key="event_type", bucket=bucket_event_time("ts"), weight=F.col("value")
+    )
+    return flag_top_pct(agg) if exact else flag_top_pct_approx(agg)
+
+
 def test_density_sums_to_rowcount(spark, sf_dir):
     ev = _events(spark, sf_dir)
-    out = energy_pipeline(
-        ev, key="event_type", time_col="ts", weight=F.col("value"), media_time=False
-    )
+    out = _energy(ev)
     assert out.agg(F.sum("density")).collect()[0][0] == ev.count()
 
 
@@ -38,9 +46,7 @@ def test_flag_rate_upper_decile(spark, sf_dir):
     """percent_rank >= 0.9 flags ≈10% of buckets per key (exactly
     ceil-ish fraction; never more than ~10% + 1/n per partition)."""
     ev = _events(spark, sf_dir)
-    out = energy_pipeline(
-        ev, key="event_type", time_col="ts", weight=F.col("value"), media_time=False
-    )
+    out = _energy(ev)
     per_key = (
         out.groupBy("key")
         .agg(
@@ -67,17 +73,10 @@ def test_exact_vs_approx_flags_agree(spark, sf_dir):
     """approx_percentile at high accuracy should reproduce the exact
     top-decile flags on small data."""
     ev = _events(spark, sf_dir)
-    exact = energy_pipeline(
-        ev, key="event_type", time_col="ts", weight=F.col("value"), media_time=False
-    ).select("key", "bucket", "is_high")
-    approx = energy_pipeline(
-        ev,
-        key="event_type",
-        time_col="ts",
-        weight=F.col("value"),
-        media_time=False,
-        exact=False,
-    ).select("key", "bucket", F.col("is_high").alias("is_high_a"))
+    exact = _energy(ev).select("key", "bucket", "is_high")
+    approx = _energy(ev, exact=False).select(
+        "key", "bucket", F.col("is_high").alias("is_high_a")
+    )
     joined = exact.join(approx, ["key", "bucket"])
     disagree = joined.filter(F.col("is_high") != F.col("is_high_a")).count()
     total = joined.count()
@@ -105,9 +104,7 @@ def test_binned_flag_keeps_all_null_key(spark):
 
 def test_timeline_sorted(spark, sf_dir):
     ev = _events(spark, sf_dir)
-    out = energy_pipeline(
-        ev, key="event_type", time_col="ts", weight=F.col("value"), media_time=False
-    )
+    out = _energy(ev)
     tl = timeline(out)
     for row in tl.collect():
         times = [e["time"] for e in row.timeline]
@@ -119,9 +116,7 @@ def test_timeline_max_buckets_is_time_prefix(spark, sf_dir):
     — exactly the uncapped timeline's prefix — and bounds the collected
     array before aggregation (executor-memory cap for unbounded keys)."""
     ev = _events(spark, sf_dir)
-    out = energy_pipeline(
-        ev, key="event_type", time_col="ts", weight=F.col("value"), media_time=False
-    )
+    out = _energy(ev)
     full = {r["key"]: r.timeline for r in timeline(out).collect()}
     capped = {
         r["key"]: r.timeline for r in timeline(out, max_buckets=5).collect()

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import duckdb
 
-from bigdataproject_spark.operators.linededup import dedup_lines, hot_lines
+from pyspark.sql import functions as F
+
+from bigdataproject_spark.operators import spandedup
+from bigdataproject_spark.operators.linededup import _hot_stats, dedup_lines
 
 ROWS = [
     (1, "COOKIE BANNER\nreal content one\n\nfooter text"),
@@ -44,8 +47,10 @@ def test_keep_first_occurrence(spark):
 
 
 def test_hot_lines_audit(spark):
-    hot = hot_lines(_docs(spark)).collect()
-    assert sorted(r["n_occurrences"] for r in hot) == [2, 3]
+    hot = _hot_stats(
+        _docs(spark), id_col="doc_id", text_col="text", min_count=2
+    ).collect()
+    assert sorted(r["_n"] for r in hot) == [2, 3]
 
 
 def test_min_count_threshold(spark):
@@ -181,27 +186,52 @@ def test_guard_fallback_equals_broadcast_path(spark):
         assert base == fallback == lazy
 
 
-def test_hot_set_bytes_measures_wide_string_ids(spark):
+def _aggregated_hot_bytes(docs) -> int:
+    """The measurement the guard's observation replaced, kept here as
+    its reference: one aggregate over the checkpointed hot set summing
+    the per-row width (40B fixed part + the _first._id slot: 8B for a
+    fixed-width id, the 8B-aligned UTF-8 length + 8B for a string)."""
+    from pyspark.sql.types import StringType
+
+    hot = _hot_stats(
+        docs, id_col="doc_id", text_col="text", min_count=2
+    ).select("_key", "_first").localCheckpoint()
+    idc = F.col("_first._id")
+    if isinstance(docs.schema["doc_id"].dataType, StringType):
+        b = F.coalesce(F.octet_length(idc), F.lit(0)).cast("long")
+        term = F.shiftleft(F.shiftright(b + F.lit(7), 3), 3) + F.lit(8)
+    else:
+        term = F.lit(8).cast("long")
+    return int(hot.agg(F.sum(F.lit(40).cast("long") + term)).collect()[0][0] or 0)
+
+
+def test_hot_set_bytes_measures_wide_string_ids(spark, monkeypatch):
     """r7 ADVICE fix: the broadcast guard's row width is MEASURED from
     the actual id column type. Long ids stay near the old fixed 40B/row;
     a wide STRING doc id multiplies the estimate — the pre-r7 constant
-    under-estimated it ~100x and could pin an over-budget broadcast."""
-    from pyspark.sql import functions as F
+    under-estimated it ~100x and could pin an over-budget broadcast.
+    The bytes are observed on the hot set's checkpoint job and equal the
+    aggregate over the checkpoint that the observation replaced."""
+    observed = []
+    real = spandedup._observed_bytes
 
-    from bigdataproject_spark.operators.linededup import (
-        _hot_set_bytes,
-        _hot_stats,
-    )
+    def record(obs):
+        observed.append(real(obs))
+        return observed[-1]
+
+    monkeypatch.setattr(spandedup, "_observed_bytes", record)
+
+    def measure(docs):
+        dedup_lines(docs)
+        assert observed[-1] == _aggregated_hot_bytes(docs)
+        return observed[-1]
 
     long_docs = spark.createDataFrame(
         [(i, "nav bar\ncontent " + str(i)) for i in range(20)],
         "doc_id long, text string",
     )
-    hot_long = _hot_stats(
-        long_docs, id_col="doc_id", text_col="text", min_count=2
-    ).select("_key", "_first").localCheckpoint()
-    n = hot_long.count()
-    b_long = _hot_set_bytes(hot_long, long_docs.schema["doc_id"].dataType)
+    n = _hot_stats(long_docs, id_col="doc_id", text_col="text", min_count=2).count()
+    b_long = measure(long_docs)
     assert n == 1 and 40 <= b_long <= 64  # one hot line, long-id row
 
     wide = "x" * 2000
@@ -209,10 +239,7 @@ def test_hot_set_bytes_measures_wide_string_ids(spark):
         [(wide + str(i), "nav bar\ncontent " + str(i)) for i in range(20)],
         "doc_id string, text string",
     )
-    hot_str = _hot_stats(
-        str_docs, id_col="doc_id", text_col="text", min_count=2
-    ).select("_key", "_first").localCheckpoint()
-    b_str = _hot_set_bytes(hot_str, str_docs.schema["doc_id"].dataType)
+    b_str = measure(str_docs)
     assert b_str > 2000  # the measured width sees the string bytes
 
     # r8 ADVICE fix: octet_length, not length — a CJK id is 3 UTF-8
@@ -223,12 +250,22 @@ def test_hot_set_bytes_measures_wide_string_ids(spark):
         [(cjk + str(i), "nav bar\ncontent " + str(i)) for i in range(20)],
         "doc_id string, text string",
     )
-    hot_cjk = _hot_stats(
-        cjk_docs, id_col="doc_id", text_col="text", min_count=2
-    ).select("_key", "_first").localCheckpoint()
-    b_cjk = _hot_set_bytes(hot_cjk, cjk_docs.schema["doc_id"].dataType)
+    b_cjk = measure(cjk_docs)
     true_id_bytes = len((cjk + "0").encode("utf-8"))
     assert b_cjk >= true_id_bytes  # measured >= true UnsafeRow bytes
+
+
+def test_guard_build_job_budget(spark, count_jobs):
+    """The guard's checkpoint job carries its byte measurement: building
+    dedup_lines runs the hot aggregation's map stage and the checkpoint
+    job, and no aggregate over the checkpoint after it (which cost two
+    more jobs); the guard-off build runs none."""
+    docs = _docs(spark)
+    for budget, jobs in ((64 << 20, 2), (1, 2), (0, 0)):
+        _, build = count_jobs(
+            lambda: dedup_lines(docs, hot_broadcast_max_bytes=budget)
+        )
+        assert build == jobs, budget
 
 
 def test_string_id_guard_correctness_all_paths(spark):

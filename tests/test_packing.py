@@ -8,7 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from bigdataproject_spark.operators.packing import pack_sequences, pack_stats
+from bigdataproject_spark.operators.packing import pack_sequences
 
 ROWS = [
     # (shard, doc_id, chunk_id, n_tokens)
@@ -57,11 +57,14 @@ def test_one_chunk_overflow_bound(spark):
     """Every pack's total lies in (target − max_chunk, target + max_chunk),
     except each shard's LAST pack which may simply be underfull."""
     target = 100
-    stats = pack_stats(_packed(spark), shard_col="shard").collect()
+    packs = _packed(spark).groupBy("shard", "pack_id").agg(
+        F.sum("n_tokens").alias("pack_tokens")
+    )
+    stats = packs.collect()
     last = {
         r["shard"]: r["pack_id"]
-        for r in pack_stats(_packed(spark), shard_col="shard")
-        .groupBy("shard").agg(F.max("pack_id").alias("pack_id")).collect()
+        for r in packs.groupBy("shard")
+        .agg(F.max("pack_id").alias("pack_id")).collect()
     }
     max_chunk = max(r[3] for r in ROWS)
     for r in stats:

@@ -95,12 +95,13 @@ def test_linededup_plan_no_cartesian_no_python(spark, sf_dir):
 
 
 def test_hot_lines_count_is_combinable(spark, sf_dir):
-    """hot_lines' shuffle must carry partial (map-side-combined)
-    aggregates — count and min both reduce before the exchange."""
-    from bigdataproject_spark.operators.linededup import dedup_lines, hot_lines
+    """The hot-line aggregate's shuffle must carry partial
+    (map-side-combined) aggregates — count and min both reduce before
+    the exchange."""
+    from bigdataproject_spark.operators.linededup import _hot_stats, dedup_lines
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    plan = _plan(hot_lines(docs))
+    plan = _plan(_hot_stats(docs, id_col="doc_id", text_col="text", min_count=2))
     assert "partial_count" in plan
     # guard-off build: with the measured guard on, the hot aggregation
     # runs at construction (localCheckpoint) and the final plan shows a

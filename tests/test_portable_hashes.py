@@ -5,10 +5,10 @@ minhash-LSH and simhash registry queries cross-engine hash-checkable.
 MinHash has one member family, ``(A_i·(sh mod P) + B_i) mod P``; only the
 shingle kernel differs (portable md5 shingles, xxhash64 shingles, or
 string shingles hashed to a long first), and all three are pinned to the
-brute-force Jaccard pairs here. The xxhash64 SimHash family is covered
-by tests/test_dedup_simsearch.py; these tests pin the portable variants'
-arithmetic so a refactor can't silently diverge from the DuckDB oracles
-(which share the same generator, bigdataproject_spark.operators.dedup).
+brute-force Jaccard pairs here. SimHash has one family too, 60 bits
+parsed from md5. These tests pin the portable arithmetic so a refactor
+can't silently diverge from the DuckDB oracles (which share the same
+generator, bigdataproject_spark.operators.dedup).
 """
 
 from __future__ import annotations
@@ -31,8 +31,8 @@ from bigdataproject_spark.operators.dedup import (
     portable_hashed_shingles,
     simhash_neardup_pairs,
     simhash_table,
-    word_shingles,
 )
+from string_shingles import word_shingles
 
 DOCS = [
     (1, ["the", "quick", "brown", "fox", "jumps"]),
@@ -61,9 +61,7 @@ def _py_simhash60(tokens: list[str]) -> int:
 def test_simhash_md5_matches_python_reference(docs_df):
     got = {
         r["id"]: r["fp"]
-        for r in simhash_table(
-            docs_df, id_col="id", tokens="tokens", hash_fn="md5"
-        ).collect()
+        for r in simhash_table(docs_df, id_col="id", tokens="tokens").collect()
     }
     for doc_id, tokens in DOCS:
         assert got[doc_id] == _py_simhash60(tokens), doc_id
@@ -75,8 +73,7 @@ def test_simhash_md5_neardup_finds_exact_dups(docs_df):
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in simhash_neardup_pairs(
-            docs_df, id_col="id", tokens="tokens", max_hamming=3, bands=4,
-            hash_fn="md5",
+            docs_df, id_col="id", tokens="tokens", max_hamming=3, bands=4
         ).collect()
     }
     assert pairs[(1, 5)] == 0

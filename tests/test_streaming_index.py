@@ -436,7 +436,7 @@ def test_auto_compaction_policy_triggers_in_stream(spark, tmp_path):
     from bigdataproject_spark.operators.dedup_index import (
         incremental_minhash_pairs,
     )
-    from bigdataproject_spark.streaming.index_stream import _n_band_files
+    from bigdataproject_spark.operators.versioned import n_live_files
 
     PROBE = [
         (21, BASE + " tomorrow"),
@@ -473,7 +473,7 @@ def test_auto_compaction_policy_triggers_in_stream(spark, tmp_path):
             _stored_ids(spark, idx),
             pairs,
         )
-        band_files[mode] = _n_band_files(spark, idx)
+        band_files[mode] = n_live_files(spark, idx, "bands")
     assert results["plain"] == results["every1"] == results["minfiles"]
     assert results["plain"][0] == {1, 2, 12}
     assert results["plain"][2]

@@ -11,11 +11,7 @@ import importlib.util
 import pytest
 from pyspark.sql import functions as F
 
-from bigdataproject_spark.functions.tokenize import (
-    get_tokenizer,
-    token_count_expr,
-    tokenize_expr,
-)
+from bigdataproject_spark.functions.tokenize import get_tokenizer, tokenize_expr
 from bigdataproject_spark.operators.chunking import chunk_documents
 from bigdataproject_spark.operators.packing import pack_sequences
 
@@ -77,7 +73,7 @@ def test_token_count_follows_injected_tokenizer(spark):
     tok = get_tokenizer(_fake_bpe_udf())
     got = (
         _docs(spark)
-        .select("doc_id", token_count_expr("text", tokenizer=tok).alias("n"))
+        .select("doc_id", F.size(tok("text")).alias("n"))
         .collect()
     )
     by_id = {r["doc_id"]: r["n"] for r in got}
