@@ -735,8 +735,7 @@ def _overwrite_cells_and_stats(
         c_prev = _prev("cells")
         c_tgt, c_ver = table_overwrite_target(spark, path, "cells")
         write_cells(c_tgt)
-        ctr_df = _one_partition_df(spark, centroids, _CENTROIDS_SCHEMA)
-        ctr_df.write.mode("overwrite").parquet(f"{c_tgt}/{_CENTROIDS_SUBDIR}")
+        _write_centroids(spark, centroids, f"{c_tgt}/{_CENTROIDS_SUBDIR}")
         # the generation's completeness marker, created only AFTER the
         # paired quantizer is on disk (write_cells deferred it): a
         # complete generation always carries its _centroids, so the
@@ -833,38 +832,57 @@ def _write_index_stats(
 ) -> None:
     """``stats_dir`` is the CONCRETE generation directory (resolve
     through operators/versioned.py — the ledger is versioned by the
-    compaction fold)."""
-    _one_partition_df(
-        spark, [(kind, int(n_rows), float(sum_d2), ledger_id)], _INDEX_STATS_SCHEMA
-    ).write.mode("append" if append else "overwrite").parquet(stats_dir)
-
-
-def _one_partition_df(spark, rows: list, schema: str) -> DataFrame:
-    """A driver-side list as a ONE-partition frame, for the index's
-    one-file writes (stats rows, centroids). ``createDataFrame`` of a
-    list parallelizes into defaultParallelism slices: coalesce(1) then
-    runs a Python worker per slice sequentially in one task (~4 s per
-    append on local[32], measured) and repartition(1) adds a shuffle
-    job; one slice is one task and one job."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def _read_stats(spark, path: str) -> DataFrame:
-    """The stats ledger as a DataFrame — explicit schema, so pre-r7
-    three-column files read with a NULL ledger_id. Pure READER:
-    resolution (operators/versioned.py) never renames."""
-    from bigdataproject_spark.operators.versioned import table_read_dir
-
-    return spark.read.schema(_INDEX_STATS_SCHEMA).parquet(
-        table_read_dir(spark, path, "stats")
+    compaction fold). The row is a literal: its non-null columns are
+    written as parquet ``required`` fields, where files written before
+    through a Python-built frame hold ``optional`` ones; the explicit
+    read schema (:func:`_read_stats`) reads both alike."""
+    row = F.struct(
+        F.lit(kind).alias("kind"),
+        F.lit(int(n_rows)).cast("bigint").alias("n_rows"),
+        F.lit(float(sum_d2)).alias("sum_d2"),
+        F.lit(ledger_id).cast("string").alias("ledger_id"),
     )
+    _one_partition_df(spark, F.array(row)).write.mode(
+        "append" if append else "overwrite"
+    ).parquet(stats_dir)
 
 
-def _ledger_id_recorded(spark, path: str, ledger_id: str) -> bool:
+def _one_partition_df(spark, rows: Column) -> DataFrame:
+    """An ``array<struct>`` literal as a ONE-partition frame, one row
+    per element, for the index's one-file writes (stats rows,
+    centroids): one task, one job, built JVM-side. A frame created
+    from a driver-side list would start a Python worker for its task
+    and, unless parallelized into one slice, one task per core."""
+    return spark.range(1, numPartitions=1).select(F.inline(rows))
+
+
+# The longest stats ledger read in ONE task. Its aggregates then need
+# no exchange (one job instead of two), but the task reads every
+# one-row file serially, and appends without compaction add a file
+# each. Drift aggregate on 4 cores, distributed vs one task: 4 files
+# 0.28 vs 0.24 s, 32 files 0.20 vs 0.22 s, 256 files 0.32 vs 0.44 s,
+# 2,048 files 1.56 vs 2.58 s (the fold and the id probe alike).
+_SERIAL_LEDGER_FILES = 16
+
+
+def _read_stats(spark, stats_dir: str) -> DataFrame:
+    """The stats ledger generation ``stats_dir`` as a DataFrame —
+    explicit schema, so pre-r7 three-column files read with a NULL
+    ledger_id. One partition while the ledger holds at most
+    :data:`_SERIAL_LEDGER_FILES` files (the count is the read's own
+    listing: no job), distributed beyond. Pure READER."""
+    sdf = spark.read.schema(_INDEX_STATS_SCHEMA).parquet(stats_dir)
+    if len(sdf._jdf.inputFiles()) <= _SERIAL_LEDGER_FILES:
+        sdf = sdf.coalesce(1)
+    return sdf
+
+
+def _ledger_id_recorded(spark, stats_dir: str, ledger_id: str) -> bool:
     """Has an append stats row for this ledger id already been written?
-    One tiny filter job over the stats table (never a full collect)."""
+    One tiny filter job over the stats table (never a full collect);
+    two when the ledger is read distributed."""
     return bool(
-        _read_stats(spark, path)
+        _read_stats(spark, stats_dir)
         .where(F.col("ledger_id") == ledger_id)
         .limit(1)
         .count()
@@ -905,6 +923,17 @@ def _centroids_dir(spark, path: str, cells_dir: str) -> str:
 
 
 _CENTROIDS_SCHEMA = "cell int, ctr array<double>"
+
+
+def _write_centroids(
+    spark, centroids: list[tuple[int, list[float]]], dirpath: str
+) -> None:
+    """The centroid table (:data:`_CENTROIDS_SCHEMA`) as one file,
+    from the same literal array :func:`assign_cell_struct_expr`
+    folds over."""
+    _one_partition_df(spark, _centroids_literal(centroids)).write.mode(
+        "overwrite"
+    ).parquet(dirpath)
 
 
 def _collect_index_centroids(
@@ -1060,15 +1089,16 @@ def ivf_append_index(
     row — the drift ledger then undercounts appended rows (advisory
     metric, but a real skew). ``ledger_id`` (requires ``guard_ids``)
     closes the window with a write-stats-FIRST protocol: the post-guard
-    delta is localCheckpoint'd and counted explicitly, the stats row —
+    delta is localCheckpoint'd and counted on that run, the stats row —
     keyed by the caller's replay-stable id (the streaming flow passes
     its batch id) — is written before the cells append UNLESS a row
     with that id already exists, and the cells append follows. A crash
     anywhere replays to a consistent state: the guard re-derives the
     identical post-guard delta while the cells are un-appended and an
     empty one after, and the ledger check makes the stats write
-    at-most-once. Cost vs the observe piggyback: the checkpoint + one
-    delta-sized aggregate + one tiny ledger-membership job.
+    at-most-once. Cost vs the observe piggyback: the checkpoint (the
+    delta's count and d2 sum are observed on its own job) + one tiny
+    ledger-membership job.
 
     ``lease_owner`` (default: this applicationId) is checked against a
     compaction lease on the index (operators/lease.py): appending while
@@ -1149,13 +1179,16 @@ def ivf_append_index(
         # post-guard delta so the counted rows ARE the appended rows.
         from bigdataproject_spark.session import release_local_checkpoint
 
-        assigned = assigned.localCheckpoint()
+        # (n, sum_d2) are observed at the root of the checkpointed plan,
+        # so the checkpoint's own job fills them (the
+        # spandedup._measured_broadcast pattern)
+        obs = Observation("ivf_append_ledger")
+        assigned = assigned.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum("_d2").alias("sum_d2")
+        ).localCheckpoint()
         try:
-            row = assigned.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("_d2").alias("sum_d2")
-            ).collect()[0]
-            n, sum_d2 = int(row["n"]), float(row["sum_d2"] or 0.0)
-            if n and not _ledger_id_recorded(spark, path, ledger_id):
+            n, sum_d2 = _obs_stats(obs)
+            if n and not _ledger_id_recorded(spark, stats_live, ledger_id):
                 _write_index_stats(
                     spark, stats_live, kind="append", n_rows=n,
                     sum_d2=sum_d2, append=True, ledger_id=ledger_id,
@@ -1200,9 +1233,12 @@ def ivf_append_index(
     # the report need not re-read them (an explicit value is verbatim)
     if max_cell_share_threshold == "auto":
         max_cell_share_threshold = _auto_cell_share_threshold(len(centroids))
-    report = ivf_index_drift(
+    # the report reads the generations this append resolved and wrote
+    report = _drift_report(
         spark,
         path,
+        stats_live,
+        cells_live,
         rebuild_threshold=rebuild_threshold,
         max_cell_share_threshold=max_cell_share_threshold,
     )
@@ -1302,9 +1338,45 @@ def ivf_index_drift(
 
     The ledger read is ONE four-value aggregate — never a collect of
     the per-batch rows — so a year of per-minute appends costs the
-    driver four numbers, not 525k rows."""
+    driver four numbers, not 525k rows. A ledger of at most
+    ``_SERIAL_LEDGER_FILES`` files is aggregated in one single-task
+    job, a longer one distributed (two jobs). The
+    occupancy read is a fixed-schema scan (no inference job) with a
+    distributed ``groupBy``: two jobs, plus one centroid collect for
+    ``"auto"``."""
+    from bigdataproject_spark.operators.versioned import table_read_dir
+
+    stats_dir = table_read_dir(spark, path, "stats")
+    cells_dir = (
+        None
+        if max_cell_share_threshold is None
+        else table_read_dir(spark, path, "cells")
+    )
+    return _drift_report(
+        spark,
+        path,
+        stats_dir,
+        cells_dir,
+        rebuild_threshold=rebuild_threshold,
+        max_cell_share_threshold=max_cell_share_threshold,
+    )
+
+
+def _drift_report(
+    spark,
+    path: str,
+    stats_dir: str,
+    cells_dir: str | None,
+    *,
+    rebuild_threshold: float,
+    max_cell_share_threshold: float | str | None,
+) -> dict:
+    """:func:`ivf_index_drift` over generations the caller already
+    resolved (``cells_dir`` may be None only when the threshold is):
+    the append reports on the generations it wrote, without resolving
+    them again."""
     agg = (
-        _read_stats(spark, path)
+        _read_stats(spark, stats_dir)
         .agg(
             F.sum(F.when(F.col("kind") == "build", F.col("n_rows"))).alias("b_n"),
             F.sum(F.when(F.col("kind") == "build", F.col("sum_d2"))).alias("b_d2"),
@@ -1336,9 +1408,6 @@ def ivf_index_drift(
         # for both reads (the same pattern as ivf_topk_indexed):
         # resolving twice could straddle a concurrent publish and pair
         # one generation's centroid count with another's occupancy.
-        from bigdataproject_spark.operators.versioned import table_read_dir
-
-        cells_dir = table_read_dir(spark, path, "cells")
         if max_cell_share_threshold == "auto":
             eff_threshold = _auto_cell_share_threshold(
                 len(_collect_index_centroids(spark, path, cells_dir))
@@ -1350,7 +1419,13 @@ def ivf_index_drift(
         # ledger can over-count the live cells table). One ≤ n_centroids
         # row collect; the hot-cell tie-break is deterministic (largest
         # n, smallest id).
-        occ = spark.read.parquet(cells_dir).groupBy("cell").count().collect()
+        occ = (
+            spark.read.schema("cell int")
+            .parquet(cells_dir)
+            .groupBy("cell")
+            .count()
+            .collect()
+        )
         if occ:
             hot_n, neg_cell = max((r["count"], -r["cell"]) for r in occ)
             hot_cell = -neg_cell
@@ -1396,8 +1471,12 @@ def ivf_compact_index(
     and duplicate (neighbor_id, cell) rows — possible only from
     UNguarded replayed appends — are dropped (one surviving row per id
     per cell; the layout does not version vectors). ``files_per_cell``
-    defaults to footer-estimated table size / 128 MiB / n_cells,
-    floored at 1.
+    defaults to footer-estimated table size / 128 MiB / the number of
+    OCCUPIED cells (``cell=`` partitions on disk — the centroid count
+    whenever every cell holds rows), floored at 1. The rewrite is one
+    exchange on (cell, salt) feeding both the dedup and the
+    partitioned write; the ledger fold is one single-task job while
+    the ledger holds at most ``_SERIAL_LEDGER_FILES`` files.
 
     The STATS LEDGER is folded in the same run (r7): per-batch append
     rows — one tiny file each — collapse into one summed row per kind
@@ -1473,36 +1552,30 @@ def _compact_index_leased(
         table_read_dir,
     )
 
-    # resolve both tables first: a failure leaves the index untouched
+    # resolve both tables and the paired quantizer first: a failure
+    # leaves the index untouched
     cells_prev = table_read_dir(spark, path, "cells")
     stats_prev = table_read_dir(spark, path, "stats")
+    ctr_prev = _centroids_dir(spark, path, cells_prev)
 
     # ---- cells generation rewrite ----
     df = spark.read.parquet(cells_prev)
     if files_per_cell is None:
         from bigdataproject_spark.operators.dedup import _plan_size_bytes
 
-        target = 128 * 1024 * 1024
-        n_cells = len(_collect_index_centroids(spark, path, cells_prev))
-        files_per_cell = max(
-            1, -(-_plan_size_bytes(df) // (target * max(n_cells, 1)))
-        )
+        target = 128 * 1024 * 1024 * _n_occupied_cells(spark, cells_prev)
+        files_per_cell = max(1, -(-_plan_size_bytes(df) // target))
     tgt, ver = table_overwrite_target(
         spark, path, "cells", force_version=True
     )
     # row counts before and after the dedup, observed on the rewrite
     # itself instead of two extra count jobs
     obs_in, obs_out = Observation("ivf_compact_in"), Observation("ivf_compact_out")
-    deduped = (
-        df.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        .dropDuplicates(["neighbor_id", "cell"])
-        .observe(obs_out, F.count(F.lit(1)).alias("n"))
-    )
-    salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(int(files_per_cell)))
     (
-        deduped.withColumn("_salt", salt)
-        .repartition(F.col("cell"), F.col("_salt"))
-        .drop("_salt")
+        _clustered_dedup(
+            df.observe(obs_in, F.count(F.lit(1)).alias("n")), files_per_cell
+        )
+        .observe(obs_out, F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite")
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .partitionBy("cell")
@@ -1513,16 +1586,16 @@ def _compact_index_leased(
     # leave an incomplete dir resolution ignores, never a
     # complete-looking generation without its quantizer
     # (:func:`_centroids_dir`); compaction never changes the quantizer.
-    _copy_centroids(
-        spark, _centroids_dir(spark, path, cells_prev), f"{tgt}/{_CENTROIDS_SUBDIR}"
-    )
+    _copy_centroids(spark, ctr_prev, f"{tgt}/{_CENTROIDS_SUBDIR}")
     _touch_success(spark, tgt)
     before = n_parquet_files(spark, cells_prev)
     rows_before, rows_after = _obs_stats(obs_in)[0], _obs_stats(obs_out)[0]
     publish_version(spark, path, "cells", ver, cells_prev)
 
     # ---- stats-ledger fold (module docstring + ivf_index_drift) ----
-    sdf = spark.read.schema(_INDEX_STATS_SCHEMA).parquet(stats_prev)
+    # a short ledger is one partition in: the per-kind sums and the
+    # marker distinct then need no exchange, and the fold is one job
+    sdf = _read_stats(spark, stats_prev)
     sums = (
         sdf.groupBy("kind")
         .agg(F.sum("n_rows").alias("n_rows"), F.sum("sum_d2").alias("sum_d2"))
@@ -1559,6 +1632,31 @@ def _compact_index_leased(
         "stats_files_before": stats_before,
         "stats_files_after": n_parquet_files(spark, s_tgt),
     }
+
+
+def _clustered_dedup(df: DataFrame, files_per_cell: int) -> DataFrame:
+    """The compaction rewrite's rows: one per (neighbor_id, cell),
+    clustered by (cell, salt) for at most ``files_per_cell`` files per
+    cell, through ONE exchange. The salt is a function of neighbor_id,
+    so dropping duplicate (neighbor_id, cell, salt) rows drops exactly
+    the duplicate (neighbor_id, cell) rows, and the hash clustering on
+    (cell, salt) already meets that aggregate's required distribution."""
+    salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(int(files_per_cell)))
+    return (
+        df.withColumn("_salt", salt)
+        .repartition(F.col("cell"), F.col("_salt"))
+        .dropDuplicates(["neighbor_id", "cell", "_salt"])
+        .drop("_salt")
+    )
+
+
+def _n_occupied_cells(spark, cells_dir: str) -> int:
+    """The number of ``cell=`` partitions under one cells generation
+    (at least 1): one ``globStatus``, no job."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(f"{cells_dir}/cell=*")
+    found = p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p)
+    return max(len(found) if found is not None else 0, 1)
 
 
 def ivf_topk_indexed(

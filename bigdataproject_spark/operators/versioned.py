@@ -62,6 +62,8 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
+
 from bigdataproject_spark.operators.lease import read_tiny_file
 
 __all__ = [
@@ -102,34 +104,35 @@ def touch(spark, filepath: str) -> None:
 
 
 def n_parquet_files(spark, dirpath: str) -> int:
-    """Recursive ``.parquet`` part-file count under one directory,
-    skipping files with ANY hidden (``_``/``.``-prefixed) path
-    component below the root — i.e. what a Spark scan of the directory
-    would actually read: the IVF index's paired ``_centroids`` copy
-    AND part files stranded under a crashed write's
-    ``_temporary/…/attempt_x/cell=…`` tree (whose immediate parent is
-    NOT hidden — a parent-only check would count them and a
+    """Recursive ``.parquet`` part-file count under one directory (0
+    when it does not exist), skipping files with ANY hidden
+    (``_``/``.``-prefixed) path component below the root — i.e. what a
+    Spark scan of the directory would actually read: the IVF index's
+    paired ``_centroids`` copy AND part files stranded under a crashed
+    write's ``_temporary/…/attempt_x/cell=…`` tree (whose immediate
+    parent is NOT hidden — a parent-only check would count them and a
     file-count compaction trigger would then fire on every batch).
     The ONE counting helper for every maintenance policy and
     compaction statistic (previously triplicated across the index
-    modules)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(dirpath)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return 0
-    root = p.toUri().getPath().rstrip("/")
-    n = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        fp = it.next().getPath()
-        if not fp.getName().endswith(".parquet"):
-            continue
-        rel = fp.toUri().getPath()[len(root):].lstrip("/")
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/")[:-1]):
-            continue
-        n += 1
-    return n
+    modules).
+
+    The count is the scan's own listing (``inputFiles`` of a
+    fixed-schema read: no job, no schema inference), which applies
+    exactly that hidden-path rule. A fresh read lists afresh, so a file
+    landed since the last count is seen. ``recursiveFileLookup`` skips
+    partition-directory inference, which only a scan needs."""
+    try:
+        df = (
+            spark.read.schema("_n int")
+            .option("pathGlobFilter", "*.parquet")
+            .option("recursiveFileLookup", "true")
+            .parquet(dirpath)
+        )
+    except AnalysisException as ex:
+        if ex.getCondition() == "PATH_NOT_FOUND":
+            return 0
+        raise
+    return len(df._jdf.inputFiles())
 
 
 def n_live_files(spark, path: str, table: str) -> int:

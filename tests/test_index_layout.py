@@ -132,14 +132,10 @@ def test_torn_rebuild_centroids_raise_naming_generation(
     ivf_write_index_from_centroids(
         base, idx, [(0, [0.0, 0.0, 1.0]), (1, [4.0, 2.0, 1.0])], **KW
     )
-    real = simsearch._one_partition_df
+    def dies_on_centroids(spark_, centroids, dirpath):
+        raise RuntimeError("rebuild died before its centroid copy")
 
-    def dies_on_centroids(spark_, rows, schema):
-        if schema == simsearch._CENTROIDS_SCHEMA:
-            raise RuntimeError("rebuild died before its centroid copy")
-        return real(spark_, rows, schema)
-
-    monkeypatch.setattr(simsearch, "_one_partition_df", dies_on_centroids)
+    monkeypatch.setattr(simsearch, "_write_centroids", dies_on_centroids)
     new_ctrs = [(c, [float(c), float(c % 3), 1.0]) for c in range(5)]
     with pytest.raises(RuntimeError, match="rebuild died"):
         ivf_write_index_from_centroids(base, idx, new_ctrs, **KW)

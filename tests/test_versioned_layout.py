@@ -157,6 +157,120 @@ def test_n_parquet_files_skips_temporary_trees(spark, tmp_path):
     assert n_parquet_files(spark, d) == live  # unchanged
 
 
+def _walk_count(spark, dirpath: str) -> int:
+    """Reference: the recursive Hadoop walk the counter replaced —
+    ``.parquet`` files with no hidden directory below the root."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(dirpath)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return 0
+    root = p.toUri().getPath().rstrip("/")
+    n = 0
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        fp = it.next().getPath()
+        if not fp.getName().endswith(".parquet"):
+            continue
+        rel = fp.toUri().getPath()[len(root):].lstrip("/")
+        if any(seg.startswith(("_", ".")) for seg in rel.split("/")[:-1]):
+            continue
+        n += 1
+    return n
+
+
+def test_n_parquet_files_listing_cases(spark, tmp_path):
+    """The counter skips a ``_centroids`` subdirectory and visible
+    non-parquet files, sees a file the filesystem copied in after a
+    first count (no stale listing), and reads a missing dir as 0."""
+    from bigdataproject_spark.operators.versioned import n_parquet_files
+
+    d = str(tmp_path / "cells")
+    cells = spark.range(8).selectExpr("id", "id % 2 AS cell").repartition(2)
+    cells.write.partitionBy("cell").parquet(d)
+    live = n_parquet_files(spark, d)
+    assert live == _walk_count(spark, d) > 0
+    spark.range(2).coalesce(1).write.parquet(f"{d}/_centroids")
+    with open(f"{d}/notes.txt", "w") as f:
+        f.write("not a part file\n")
+    assert n_parquet_files(spark, d) == _walk_count(spark, d) == live
+    part = next(
+        f for f in sorted(os.listdir(f"{d}/cell=0")) if f.endswith(".parquet")
+    )
+    shutil.copy(f"{d}/cell=0/{part}", f"{d}/cell=0/copied-{part}")
+    assert n_parquet_files(spark, d) == _walk_count(spark, d) == live + 1
+    assert n_parquet_files(spark, str(tmp_path / "missing")) == 0
+
+
+def test_n_parquet_files_equals_walk_on_both_indexes(spark, tmp_path):
+    """Equal to the recursive walk on a compacted IVF index (cells and
+    stats generations, old and new) and on the dedup index's bands and
+    shingles tables, before and after their compaction."""
+    from pyspark.sql import functions as F
+
+    from bigdataproject_spark.operators.dedup import hashed_word_shingles
+    from bigdataproject_spark.operators.dedup_index import (
+        accept_batch,
+        compact_index,
+        write_minhash_index,
+    )
+    from bigdataproject_spark.operators.simsearch import (
+        ivf_append_index,
+        ivf_compact_index,
+        ivf_write_index_from_centroids,
+    )
+    from bigdataproject_spark.operators.versioned import n_parquet_files
+
+    kw = dict(id_col="vec_id", vec_col="embedding")
+    ivf = str(tmp_path / "ivf")
+    vecs = "vec_id long, embedding array<double>"
+    ivf_write_index_from_centroids(
+        spark.createDataFrame([(i, [float(i % 5), 1.0]) for i in range(40)], vecs),
+        ivf, [(c, [float(c), 1.0]) for c in range(3)], **kw,
+    )
+    for b in range(2):
+        ivf_append_index(
+            spark.createDataFrame(
+                [(100 * (b + 1) + i, [float(i % 4), 1.0]) for i in range(10)], vecs
+            ),
+            ivf, **kw,
+        )
+    ivf_compact_index(spark, ivf)
+    ivf_dirs = [
+        f"{ivf}/{name}"
+        for name in sorted(os.listdir(ivf))
+        if name.startswith(("cells", "stats")) and os.path.isdir(f"{ivf}/{name}")
+    ]
+    assert len(ivf_dirs) == 4  # gen 0 (the grace copy) + gen 1, per table
+
+    def docs(rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        tokens = F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"), lambda x: x != "")
+        return df.withColumn("tokens", tokens).withColumn(
+            "shingles", hashed_word_shingles("tokens", 3)
+        )
+
+    dd = str(tmp_path / "dedup")
+    dkw = dict(id_col="doc_id", shingles_col="shingles")
+    write_minhash_index(
+        docs([(1, "the old sailor and the young cook set out to sea at dawn")]),
+        dd,
+        **dkw,
+    )
+    accept_batch(
+        spark, docs([(2, "a distinct text about winter storage of root vegetables")]),
+        dd, threshold=0.8, **dkw,
+    )
+    dedup_dirs = [f"{dd}/bands", f"{dd}/shingles"]
+    counts = [(d, n_parquet_files(spark, d), _walk_count(spark, d)) for d in dedup_dirs]
+    compact_index(spark, dd)
+    dedup_dirs += [f"{dd}/bands-v1", f"{dd}/shingles-v1"]
+    for d in ivf_dirs + dedup_dirs:
+        counts.append((d, n_parquet_files(spark, d), _walk_count(spark, d)))
+    for d, got, want in counts:
+        assert got == want > 0, d
+
+
 class _FakeJavaExc:
     def __init__(self, name, cause=None):
         self._name, self._cause = name, cause
